@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Layout — field-major subtrees under ONE index root:
   * {{{
-  *   root/_fields_meta      one-row table: fields, analyzer, buckets,
-  *                          positions — written LAST, the root's
-  *                          build commit marker
+  *   root/_fields_meta      doc: fields, analyzer, buckets, positions
+  *                          ([[SegmentStore.writeDocDir]]) — written
+  *                          LAST, the root's build commit marker; read
+  *                          on the driver
   *   root/fields/<field>    a full [[InvertedIndex]] per field
   *                          (segments/seg-…, deletes/batch-…)
   * }}}
@@ -69,17 +70,13 @@ object FieldedIndex {
     * independent single-writer domains (no shared files, no shared
     * stats), and Spark's scheduler interleaves their jobs — a
     * two-field build costs about one field's wall-clock instead of
-    * two. The first failure propagates after all futures settle, so a
-    * crash still leaves each subtree either committed or invisible.
+    * two. [[SegmentStore.inParallel]] settles every field's op, on
+    * failure and on interrupt, before the first failure propagates, so
+    * a crash still leaves each subtree either committed or invisible
+    * and no field is still writing when the call returns.
     */
-  private def perField[T](items: Seq[T])(f: T => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(items.map(i => Future(f(i)))), Duration.Inf)
-    ()
-  }
+  private def perField[T](items: Seq[T])(f: T => Unit): Unit =
+    SegmentStore.inParallel(items.map(i => () => f(i)))
 
   /** Field names must be path-safe: they become directory names. */
   private def requirePathSafe(f: String): Unit =
@@ -96,8 +93,16 @@ object FieldedIndex {
     require(fs.exists(new org.apache.hadoop.fs.Path(
         s"${metaPath(root)}/_SUCCESS")),
       s"$root has no _fields_meta — build() a fielded index first")
-    spark.read.parquet(metaPath(root))
-      .select("fields").head().getString(0).split(",").toSeq
+    SegmentStore.readDocDir(fs, metaPath(root)) match {
+      case Some(doc) => (doc \ "fields") match {
+        case org.json4s.JArray(xs) =>
+          xs.collect { case org.json4s.JString(f) => f }
+        case other => sys.error(s"malformed _fields_meta doc: $other")
+      }
+      case None => // a parquet meta table (older builds)
+        spark.read.parquet(metaPath(root))
+          .select("fields").head().getString(0).split(",").toSeq
+    }
   }
 
   /** Create a FRESH fielded index at `root`: one [[InvertedIndex]]
@@ -123,12 +128,12 @@ object FieldedIndex {
       staged.count() // materialize once before the concurrent builds
       perField(fieldCols)(f => InvertedIndex.build(staged, idCol, f,
         fieldDir(root, f), buckets, positions, analyzer))
-      spark.range(1).select(
-          lit(fieldCols.mkString(",")).as("fields"),
-          lit(analyzer).as("analyzer"),
-          lit(buckets).as("buckets"),
-          lit(positions).as("positions"))
-        .coalesce(1).write.mode("overwrite").parquet(metaPath(root))
+      SegmentStore.writeDocDir(fs, metaPath(root), org.json4s.JObject(
+        "fields" -> org.json4s.JArray(fieldCols
+          .map(org.json4s.JString(_): org.json4s.JValue).toList),
+        "analyzer" -> org.json4s.JString(analyzer),
+        "buckets" -> org.json4s.JInt(buckets),
+        "positions" -> org.json4s.JBool(positions)))
     } finally {
       staged.unpersist()
       ()
@@ -290,11 +295,9 @@ object FieldedIndex {
     require(fieldBoosts.map(_._1).distinct.size == fieldBoosts.size,
       s"duplicate fields in $fieldBoosts")
     val phraseTerms = graft.functions.TextAnalysis.tokensOf(query)
-    // per-field segment/tombstone listings are driver FS ops; the
-    // per-field corpus moments batch into ONE stats job
-    // (InvertedIndex.liveStatsBatch) instead of one tiny job per
-    // field — a wide index (tens of fields) serves a query with a
-    // single stats read
+    // per-field segment/tombstone listings and the per-field corpus
+    // moments (InvertedIndex.liveStatsBatch) are driver-side reads —
+    // building the frame runs no job, however wide the index
     val meta = fieldBoosts.map { case (f, _) =>
       val dir = fieldDir(root, f)
       val segs = InvertedIndex.committedSegments(spark, dir)
@@ -346,7 +349,7 @@ object FieldedIndex {
     * leg present — and mustNot never scores. Score = Σ over present
     * positive clauses of each clause's BEST leg, single 6-dp round.
     *
-    * Plan shape: ONE stats job for every touched field
+    * Plan shape: driver-side stats for every touched field
     * ([[InvertedIndex.liveStatsBatch]]), one bucket-pruned postings
     * read per touched field covering only that field's terms, a
     * broadcast clause-leg table, then two bounded aggregations
@@ -471,7 +474,7 @@ object FieldedIndex {
       // a query that analyzes to zero terms matches nothing (ES's
       // empty-match) — typed empty frame, id type from the postings
       // footer
-      val idT = spark.read.parquet(s"${segs.head}/postings").schema("id")
+      val idT = InvertedIndex.postingsOf(spark, segs.head).schema("id")
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(idT,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.TextAnalysis
 
 /** A persistent inverted index (term → postings) with index-backed
@@ -178,6 +179,7 @@ object InvertedIndex {
           .groupBy(col("term"), col("id"), col("len"))
           .agg(count(lit(1)).cast("double").as("tf")))
       .withColumn("bucket", termBucket(col("term"), buckets))
+    val lens = staged.select(col("id"), col("len"))
     // postings and lens read the same persisted staged frame and land
     // in different dirs — overlap them (guide §2.6); stats stays LAST
     // (the commit marker), so crash-safety is unchanged
@@ -198,27 +200,33 @@ object InvertedIndex {
         // the exact ledger [[deleteDocs]] charges against and compact()
         // sums stats from — postings can't serve either (token-free
         // docs have none, and per-term rows repeat len)
-        staged.select(col("id"), col("len"))
-          .write.mode("overwrite").parquet(s"$seg/lens"))))
+        lens.write.mode("overwrite").parquet(s"$seg/lens"))))
     // ADDITIVE moments (n, sum_len — not avg), so multi-segment
     // search and compact() merge stats exactly — from the
     // contract-check agg above, no second pass over staged, written
     // as the driver-side stats doc (marker last; see
     // [[SegmentStore.writeDocDir]])
     writeSegStats(staged.sparkSession, seg, ur.getLong(0).toDouble,
-      ur.getDouble(2), buckets, positions, analyzer)
+      ur.getDouble(2), buckets, positions, analyzer, Seq(
+        "postings" -> SegmentStore.writtenSchema(postings, Seq("bucket")),
+        "lens" -> SegmentStore.writtenSchema(lens)))
   }
 
+  /** The segment's commit doc: additive moments, layout, and the read
+    * schema of each payload dir (see [[SegmentStore.readPayload]]).
+    */
   private def writeSegStats(spark: SparkSession, seg: String, n: Double,
                             sumLen: Double, buckets: Int,
-                            positions: Boolean, analyzer: String): Unit =
+                            positions: Boolean, analyzer: String,
+                            schemas: Seq[(String, StructType)]): Unit =
     SegmentStore.writeDocDir(fsOf(spark, seg), s"$seg/stats",
       org.json4s.JObject(
         "n" -> org.json4s.JDouble(n),
         "sum_len" -> org.json4s.JDouble(sumLen),
         "buckets" -> org.json4s.JInt(buckets),
         "positions" -> org.json4s.JBool(positions),
-        "analyzer" -> org.json4s.JString(analyzer)))
+        "analyzer" -> org.json4s.JString(analyzer),
+        SegmentStore.schemaField(schemas)))
 
   /** One committed segment's stats, read DRIVER-SIDE (no Spark job —
     * the stats sidecar is one JSON doc since r17-opt; a legacy parquet
@@ -302,9 +310,16 @@ object InvertedIndex {
                              segs: Seq[String]): Boolean =
     segs.nonEmpty && readSegStats(spark, segs.head).positions
 
+  /** One segment's postings, opened with the schema its commit doc
+    * records (no inference job).
+    */
+  private[operators] def postingsOf(spark: SparkSession,
+                                    seg: String): DataFrame =
+    SegmentStore.readPayload(spark, seg, "postings")
+
   private def mergedPostings(spark: SparkSession, segs: Seq[String],
                              prune: DataFrame => DataFrame): DataFrame =
-    segs.map(s => prune(spark.read.parquet(s"$s/postings")))
+    segs.map(s => prune(postingsOf(spark, s)))
       .reduce(_ unionByName _)
 
   /** [[mergedPostings]] with each segment's rows tagged by segment
@@ -315,7 +330,7 @@ object InvertedIndex {
   private def mergedLivePostings(spark: SparkSession, segs: Seq[String],
                                  dels: Seq[String],
                                  prune: DataFrame => DataFrame): DataFrame =
-    segs.map(s => prune(spark.read.parquet(s"$s/postings"))
+    segs.map(s => prune(postingsOf(spark, s))
         .withColumn("_seg", lit(new org.apache.hadoop.fs.Path(s).getName)))
       .reduce(_ unionByName _)
       .join(broadcast(tombstonePairs(spark, dels)),
@@ -826,7 +841,9 @@ object InvertedIndex {
           live.repartition(lb, col("id")),
           s"$seg/lens", Seq("id"), lb)))
       writeSegStats(spark, seg, m.getDouble(0), m.getDouble(1),
-        tb, positions, analyzer)
+        tb, positions, analyzer, Seq(
+          "postings" -> SegmentStore.writtenSchema(mergedLive, Seq("bucket")),
+          "lens" -> SegmentStore.writtenSchema(live)))
       (segs ++ dels).foreach(s =>
         fs.delete(new org.apache.hadoop.fs.Path(s), true))
       Manifest.delete(fs, manifestPath(indexPath))
@@ -946,9 +963,9 @@ object InvertedIndex {
     // index: an empty result would read as "no matches"
     require(segs.nonEmpty,
       s"$indexPath has no committed segments — build() first")
-    // ONE driver-side read of the (one-row-per-segment) stats tables
-    // serves n, avg len, AND the bucket count — the serving path pays
-    // a single tiny job, and the corpus stats enter the score plan as
+    // ONE driver-side read of the (one-per-segment) stats docs serves
+    // n, avg len, AND the bucket count — the serving path runs no job
+    // before the caller's action, and the corpus stats enter the plan as
     // literals instead of a crossJoin. Committed tombstone batches
     // subtract their (pre-charged, lens-exact) moments the same way,
     // and tombstoned docs drop out of the postings BEFORE df counts
@@ -1259,7 +1276,7 @@ object InvertedIndex {
     val empty = {
       // typed empty result: id type from the postings schema (footer
       // read only; the lens dir may be bucketed on compacted segments)
-      val idT = spark.read.parquet(s"${segs.head}/postings").schema("id")
+      val idT = postingsOf(spark, segs.head).schema("id")
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
@@ -1394,14 +1411,16 @@ object InvertedIndex {
     * is the two-phase top-k of [[Similarity.rankTopKPerQuery]] — no
     * query's candidate set ever funnels through a single partition.
     *
-    * Driver-side footprint is bounded regardless of workload size:
-    * when the workload's distinct-term vocabulary is small (≤
-    * `maxPushdownTerms`) the terms collect to the driver and push
-    * into the parquet scan exactly like [[searchTopK]]; beyond that
-    * the scan prunes on the ≤ 256 wanted BUCKET ids (collected from a
-    * tiny distinct-agg) and the term membership test joins
-    * distributed instead — no unbounded IN-list, no unbounded
-    * collect.
+    * The (query, term) side is bounded by the query frame (Σ|query
+    * terms| rows), so it is collected ONCE — the call's only possible
+    * Spark job, and none for a query frame built on the driver — and
+    * re-enters the plan as a local relation: nothing stays persisted
+    * after the call. When the workload's distinct-term
+    * vocabulary is small (≤ `maxPushdownTerms`) the terms push into
+    * the parquet scan exactly like [[searchTopK]]; beyond that the
+    * scan prunes on the ≤ 256 wanted BUCKET ids ([[bucketOf]] on the
+    * driver) and the term membership test joins instead — no
+    * unbounded IN-list.
     *
     * Output: (qIdCol, rank, idColName, score) for rank ≤ k per query,
     * row-identical per query to [[searchTopK]] (same formula, 6-dp
@@ -1433,26 +1452,30 @@ object InvertedIndex {
     // LiveStats.analyzeTerm), de-duped within each query so a repeated
     // term — or two surface forms sharing a stem — cannot double its
     // score contribution
-    val analyzed =
+    def analyzed(t: Column): Column =
       if (st.analyzer == "english")
-        graft.functions.EnglishMinimalStem.stem(lower(col("term")))
-      else lower(col("term"))
-    val qt = queries.select(col(qIdCol), explode(col(termsCol)).as("term"))
-      .withColumn("term", analyzed).distinct()
-      .localCheckpoint(true) // bounded: Σ|query terms|; reused 2×
-    val nTerms = qt.select("term").distinct().count()
+        graft.functions.EnglishMinimalStem.stem(lower(t))
+      else lower(t)
+    // bounded: Σ|query terms| rows, analyzed in a pure projection —
+    // a query frame built on the driver folds into a local relation
+    // and the collect runs no job — then exploded and de-duped here
+    val perQuery = queries.select(col(qIdCol),
+      transform(col(termsCol), analyzed(_)).as("_terms"))
+    val qtRows = perQuery.collect().toSeq.flatMap(r =>
+      Option(r.getSeq[String](1)).toSeq.flatten
+        .map(t => org.apache.spark.sql.Row(r.get(0), t))).distinct
+    val qt = spark.createDataFrame(java.util.Arrays.asList(qtRows: _*),
+      perQuery.select(col(qIdCol), explode(col("_terms")).as("term")).schema)
+    // a null term matches no posting
+    val terms = qtRows.map(_.getString(1)).filter(_ != null).distinct.toSeq
     val p =
-      if (nTerms <= maxPushdownTerms) {
-        val terms = qt.select("term").distinct()
-          .collect().map(_.getString(0)).toSeq
+      if (terms.size <= maxPushdownTerms)
         prunedLivePostings(spark, segs, dels, terms, st.buckets)
-      } else {
-        val wanted = qt.select(termBucket(col("term"), st.buckets)
-            .as("bucket")).distinct().collect().map(_.getInt(0)).toSeq
-        val termSet = qt.select("term").distinct()
+      else {
+        val wanted = terms.map(bucketOf(_, st.buckets)).distinct
         val prune: DataFrame => DataFrame =
           _.filter(col("bucket").isin(wanted: _*))
-            .join(termSet, Seq("term"), "left_semi")
+            .join(qt.select("term").distinct(), Seq("term"), "left_semi")
         if (dels.isEmpty) mergedPostings(spark, segs, prune)
         else mergedLivePostings(spark, segs, dels, prune)
       }
@@ -1604,7 +1627,7 @@ object InvertedIndex {
     val full = qs.init.map(st.analyzeTerm)
     val (p0, exts, _) = vocabPrefixCandidates(spark, indexPath,
       st.analyzeTerm(qs.last), maxCandidates, Some(segs))
-    val idT = spark.read.parquet(s"${segs.head}/postings").schema("id")
+    val idT = postingsOf(spark, segs.head).schema("id")
     def emptyResult = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(
@@ -1644,17 +1667,12 @@ object InvertedIndex {
     val ptf = size(filter(col("_pos0"), p =>
       ((1 until m).map(i => array_contains(col(s"_pos$i"), p + i)) :+
         array_contains(col("_ppos"), p + m)).reduce(_ && _)))
-    val idfMap = dfreq
-      .select(col("term"),
-        log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5))
-          .as("_idf"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val totalIdf = full.map(idfMap.getOrElse(_, 0.0)).sum
     joined
+      .crossJoin(broadcast(phraseIdfSum(dfreq, full, n)))
       .withColumn("_ptf", ptf.cast("double"))
       .filter(col("_ptf") > 0)
       .withColumn("score", round(
-        lit(totalIdf) * col("_ptf") * (k1 + 1.0) /
+        col("_tidf") * col("_ptf") * (k1 + 1.0) /
           (col("_ptf") +
             lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg)))
           + 1.0, 6))
@@ -1742,22 +1760,36 @@ object InvertedIndex {
         size(filter(col("_pos0"), p =>
           chain(1, p, p, List((terms.head, p)))))
       }
-    // Σ idf over the phrase's terms IN ORDER (a repeated term counts
-    // each time, like Lucene's term array)
-    val idfSum = dfreq
-      .select(col("term"),
-        log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5))
-          .as("_idf"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val totalIdf = terms.map(idfSum.getOrElse(_, 0.0)).sum
     joined
+      .crossJoin(broadcast(phraseIdfSum(dfreq, terms, n)))
       .withColumn("_ptf", ptf.cast("double"))
       .filter(col("_ptf") > 0)
       .withColumn("_fs",
-        lit(totalIdf) * col("_ptf") * (k1 + 1.0) /
+        col("_tidf") * col("_ptf") * (k1 + 1.0) /
           (col("_ptf") +
             lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
       .select(col("id"), col("_fs"))
+  }
+
+  /** The phrase idf as a one-row frame `_tidf`: Σ idf over `terms` IN
+    * ORDER (a repeated term counts each time, like Lucene's term
+    * array), folded left from 0.0 — the double sum a driver-side fold
+    * of the same per-term idfs gives, bit for bit — but inside the
+    * plan, so the call runs no job. A term without live postings
+    * counts 0.0. `dfreq` is (term, _df), ≤ |terms| rows.
+    */
+  private def phraseIdfSum(dfreq: DataFrame, terms: Seq[String],
+                           n: Double): DataFrame = {
+    val distinct = terms.distinct
+    val idf =
+      log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5))
+    val perTerm = distinct.zipWithIndex.map { case (t, j) =>
+      max(when(col("term") === t, idf)).as(s"_idf$j")
+    }
+    dfreq.agg(perTerm.head, perTerm.tail: _*)
+      .select(terms.foldLeft(lit(0.0)) { (acc, t) =>
+        acc + coalesce(col(s"_idf${distinct.indexOf(t)}"), lit(0.0))
+      }.as("_tidf"))
   }
 
   // ---- fuzzy term resolution (SymSpell deletion neighborhood) ------
@@ -1992,24 +2024,30 @@ object InvertedIndex {
 
   /** Build (or rebuild) the sorted vocabulary sidecar at
     * `indexPath/vocab` for [[suggestCompletions]], with the same
-    * build-from fingerprint (`vocab_segments`, written LAST) and
-    * staleness direction as [[buildFuzzyDictionary]]: an append since
-    * the build would silently miss its new vocabulary, so queries
-    * refuse a mismatched segment set loudly.
+    * build-from fingerprint and staleness direction as
+    * [[buildFuzzyDictionary]]: an append since the build would
+    * silently miss its new vocabulary, so queries refuse a mismatched
+    * segment set loudly. The fingerprint is the `vocab_segments` doc
+    * (written LAST, [[SegmentStore.writeDocDir]]): the segment names
+    * plus the vocabulary's read schema, so a query reads both on the
+    * driver.
     */
   def buildVocabulary(spark: SparkSession, indexPath: String): Unit = {
     val segs = committedSegments(spark, indexPath)
     require(segs.nonEmpty,
       s"$indexPath has no committed segments — build() first")
-    mergedPostings(spark, segs, identity)
+    val vocab = mergedPostings(spark, segs, identity)
       .select("term").distinct()
+    vocab
       .repartitionByRange(8, col("term"))
       .sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$indexPath/vocab")
-    import spark.implicits._
-    segNames(segs).toDF("segment")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexPath/vocab_segments")
+    SegmentStore.writeDocDir(fsOf(spark, indexPath),
+      s"$indexPath/vocab_segments", org.json4s.JObject(
+        "segments" -> org.json4s.JArray(segNames(segs)
+          .map(org.json4s.JString(_): org.json4s.JValue).toList),
+        SegmentStore.schemaField(
+          Seq("vocab" -> SegmentStore.writtenSchema(vocab)))))
   }
 
   /** ES's completion suggester from the live index: the top-`k`
@@ -2063,8 +2101,18 @@ object InvertedIndex {
         s"$indexPath has no committed segments — build() first")
       listed
     }
-    val recorded = spark.read.parquet(s"$indexPath/vocab_segments")
-      .collect().map(_.getString(0)).sorted.toSeq
+    // the fingerprint doc; a parquet one (older builds) reads through
+    // Spark
+    val doc = SegmentStore.readDocDir(fs, s"$indexPath/vocab_segments")
+    val recorded = doc.fold(
+        spark.read.parquet(s"$indexPath/vocab_segments")
+          .collect().map(_.getString(0)).toSeq) { d =>
+        (d \ "segments") match {
+          case org.json4s.JArray(xs) =>
+            xs.collect { case org.json4s.JString(x) => x }
+          case other => sys.error(s"malformed vocab_segments doc: $other")
+        }
+      }.sorted
     require(recorded == segNames(segs),
       s"$indexPath/vocab is STALE: it was built from segments " +
         s"$recorded but the index now has ${segNames(segs)} — " +
@@ -2074,11 +2122,19 @@ object InvertedIndex {
     // (startsWith alone doesn't push as a range); any real char's
     // first UTF-16 unit sorts below the U+FFFF noncharacter, so the
     // upper bound never excludes a true extension of the prefix
-    val cand = spark.read.parquet(s"$indexPath/vocab")
+    // ONE job: each scan partition keeps at most cap + 1 terms (a
+    // global limit's incremental take scans partitions in rounds, a
+    // job each); the sidecar is range-partitioned by term, so a
+    // prefix's terms sit in one or two files and the driver receives
+    // about cap + 1 terms at most
+    val cand = SegmentStore.readWithSchema(spark, s"$indexPath/vocab",
+        doc.flatMap(SegmentStore.recordedSchema(_, "vocab")))
       .filter(col("term") >= p && col("term") < p + '￿')
       .filter(col("term").startsWith(p))
-      .limit(maxCandidates + 1)
-      .collect().map(_.getString(0)).toSeq
+      .select(col("term")).as(org.apache.spark.sql.Encoders.STRING)
+      .mapPartitions(_.take(maxCandidates + 1))(
+        org.apache.spark.sql.Encoders.STRING)
+      .collect().take(maxCandidates + 1).toSeq
     require(cand.length <= maxCandidates,
       s"prefix '$prefix' matched more than $maxCandidates vocabulary " +
         "terms — lengthen the prefix or raise the cap deliberately")
@@ -2357,7 +2413,7 @@ object InvertedIndex {
     val fullTerms = qs.init.map(st.analyzeTerm).distinct
     val (p, exts, segs) = vocabPrefixCandidates(spark, indexPath,
       st.analyzeTerm(qs.last), maxCandidates, Some(segs0))
-    val idT = spark.read.parquet(s"${segs.head}/postings").schema("id")
+    val idT = postingsOf(spark, segs.head).schema("id")
     def emptyResult = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(

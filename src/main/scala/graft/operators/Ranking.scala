@@ -109,10 +109,14 @@ object Ranking {
         t.toLowerCase(java.util.Locale.ROOT)))
       .distinct
     val tks = fieldWeights.map { case (f, _) => f -> s"_tk_$f" }.toMap
+    // a null field holds no tokens: coalesced to array() here, since
+    // a NULL array would null both the flattened occurrences (losing
+    // the doc's matches in EVERY field) and the size sum in _clen
     val staged = docs.select(col(idCol) +: fieldWeights.map {
         case (f, _) =>
-          graft.functions.EnglishMinimalStem
-            .analyzeTokens(analyzer, TextAnalysis.tokens(col(f)))
+          coalesce(graft.functions.EnglishMinimalStem
+              .analyzeTokens(analyzer, TextAnalysis.tokens(col(f))),
+            array().cast("array<string>"))
             .as(tks(f))
       }: _*)
       .withColumn("_clen", fieldWeights.map { case (f, w) =>

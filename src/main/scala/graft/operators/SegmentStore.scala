@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.json4s.JValue
 
 /** The segment-store discipline shared by the persistent indexes
   * ([[InvertedIndex]], [[VectorIndex]]): immutable segments committed
@@ -15,11 +17,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * Layout under an index root:
   * {{{
-  *   segments/<name>/...      payload + stats/ (marker: stats/_SUCCESS)
-  *   deletes/batch-<uuid>/    ids/ + segs/ + stats/ (marker: stats/_SUCCESS)
+  *   segments/<name>/...      payload dirs + stats/ (marker: stats/_SUCCESS)
+  *   deletes/batch-<uuid>/    ids/ + stats/ (marker: stats/_SUCCESS)
   *   ingested/batch-<id>      exactly-once ledger markers
   *   compacting               manifest of an in-flight compaction
   * }}}
+  *
+  * The commit doc (`stats/doc.json`) of a segment or tombstone batch
+  * carries, next to its moments, a `schema` object: for every payload
+  * dir the write produced (`postings`, `lens`, `vectors`, `ids`,
+  * `codes`), the schema a plain `spark.read.parquet` of that dir
+  * infers — nullable, partition columns last. Every payload read goes
+  * through [[readPayload]], which hands that schema to the reader, so
+  * opening a directory costs no schema-inference job: a search call
+  * builds its whole plan on the driver and runs no Spark job before
+  * the caller's action (the bounded query-side collects of the batch
+  * and vector searches aside). Dirs whose doc has no `schema` (every
+  * layout written before it existed) read through inference.
   */
 private[graft] object SegmentStore {
 
@@ -118,6 +132,58 @@ private[graft] object SegmentStore {
     }
   }
 
+  /** The schema `spark.read.parquet` infers for what writing `df` with
+    * `partitionCols` leaves on disk: every field nullable (Spark's read
+    * side makes them so) and the partition columns moved last, where
+    * partition discovery appends them. Known at write time, so the
+    * commit doc records it without a job.
+    */
+  def writtenSchema(df: DataFrame,
+                    partitionCols: Seq[String] = Nil): StructType = {
+    val s = nullable(df.schema).asInstanceOf[StructType]
+    StructType(s.filterNot(f => partitionCols.contains(f.name)) ++
+      partitionCols.map(s(_)))
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The commit doc's `schema` field: payload sub-dir → schema. */
+  def schemaField(schemas: Seq[(String, StructType)]): (String, JValue) =
+    "schema" -> org.json4s.JObject(schemas.map { case (sub, st) =>
+      sub -> org.json4s.jackson.JsonMethods.parse(st.json)
+    }.toList)
+
+  /** The schema a commit doc records for payload `sub`, if any. */
+  def recordedSchema(doc: JValue, sub: String): Option[StructType] =
+    (doc \ "schema" \ sub) match {
+      case o: org.json4s.JObject =>
+        Some(org.apache.spark.sql.types.DataType.fromJson(
+          org.json4s.jackson.JsonMethods.compact(
+            org.json4s.jackson.JsonMethods.render(o)))
+          .asInstanceOf[StructType])
+      case _ => None
+    }
+
+  /** Read payload `sub` of a committed segment or tombstone batch `dir`
+    * with the schema its commit doc records — no inference job — or
+    * through inference when the doc records none (older layouts).
+    */
+  def readPayload(spark: SparkSession, dir: String, sub: String): DataFrame =
+    readWithSchema(spark, s"$dir/$sub",
+      readDocDir(fsOf(spark, dir), s"$dir/stats")
+        .flatMap(recordedSchema(_, sub)))
+
+  def readWithSchema(spark: SparkSession, path: String,
+                     schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
   /** Numeric field of a doc (JSON numbers parse as int or double). */
   def docDouble(doc: org.json4s.JValue, field: String): Double =
     (doc \ field) match {
@@ -131,12 +197,13 @@ private[graft] object SegmentStore {
   /** (id, _seg) applicability pairs of the committed tombstones: a
     * row means "id is dead IN that segment". Bounded between
     * compactions — always broadcast, never shuffled against payloads.
-    * The scope rides the stats doc (one driver-side read); legacy
-    * batches fall back to their `segs` parquet.
+    * The scope and the ids schema ride the stats doc (one driver-side
+    * read); legacy batches fall back to their `segs` parquet.
     */
   def tombstonePairs(spark: SparkSession, dels: Seq[String]): DataFrame =
     dels.map { d =>
-      val scopeDf = readDocDir(fsOf(spark, d), s"$d/stats")
+      val doc = readDocDir(fsOf(spark, d), s"$d/stats")
+      val scopeDf = doc
         .flatMap { doc =>
           (doc \ "scope") match {
             case org.json4s.JArray(xs) =>
@@ -147,7 +214,8 @@ private[graft] object SegmentStore {
           }
         }
         .getOrElse(spark.read.parquet(s"$d/segs"))
-      spark.read.parquet(s"$d/ids").crossJoin(scopeDf)
+      readWithSchema(spark, s"$d/ids", doc.flatMap(recordedSchema(_, "ids")))
+        .crossJoin(scopeDf)
     }.reduce(_ unionByName _)
 
   /** Commit one tombstone batch: the ids parquet first, then the stats
@@ -171,7 +239,8 @@ private[graft] object SegmentStore {
         ("scope" -> (org.json4s.JArray(
           segs.map(s => org.json4s.JString(
             new org.apache.hadoop.fs.Path(s).getName): org.json4s.JValue)
-            .toList): org.json4s.JValue))))
+            .toList): org.json4s.JValue)) :+
+        schemaField(Seq("ids" -> writtenSchema(ids)))))
   }
 
   /** Per-segment ledger rows (`<seg>/<sub>` — the inverted index's
@@ -197,7 +266,7 @@ private[graft] object SegmentStore {
       val base =
         if (Bucketing.isBucketedBatch(fs, path))
           Bucketing.readBucketedBatch(spark, path)
-        else spark.read.parquet(path)
+        else readPayload(spark, s, sub)
       val tagged = base.withColumn("_seg",
         org.apache.spark.sql.functions.lit(
           new org.apache.hadoop.fs.Path(s).getName))
@@ -228,11 +297,14 @@ private[graft] object SegmentStore {
     * the same batchId rewrite segment dirs concurrently with the
     * orphaned writer. Only then does the first failure propagate; the
     * caller still writes its commit marker (stats) strictly AFTER this
-    * returns, so the stats-last discipline is untouched. The tasks run
-    * on a small dedicated pool, not the global ExecutionContext —
-    * callers like FieldedIndex.perField already occupy the global pool
-    * with blocking Spark actions, and nesting blocking Awaits there
-    * leaned on ForkJoinPool managed blocking and its thread cap.
+    * returns, so the stats-last discipline is untouched. An interrupt
+    * of the waiting caller settles the siblings too: the pool is shut
+    * down with `shutdownNow()` (which interrupts every task) and
+    * awaited to termination before the interrupt propagates. The tasks
+    * run on a small dedicated pool per call, not the global
+    * ExecutionContext, so nested calls (a per-field
+    * [[FieldedIndex]] op whose segment write overlaps its own jobs)
+    * never wait on a shared pool's thread cap.
     */
   def inParallel(tasks: Seq[() => Unit]): Unit =
     if (tasks.length <= 1) tasks.foreach(_())
@@ -240,12 +312,23 @@ private[graft] object SegmentStore {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         tasks.length)
       try {
-        val settled = tasks
+        val futures = tasks
           .map(t => pool.submit(new java.util.concurrent.Callable[Option[Throwable]] {
             override def call(): Option[Throwable] =
               try { t(); None } catch { case e: Throwable => Some(e) }
           }))
-          .map(_.get()) // settle ALL tasks, failures included
+        val settled =
+          try futures.map(_.get()) // settle ALL tasks, failures included
+          catch {
+            case ie: InterruptedException =>
+              pool.shutdownNow()
+              // the caller is interrupted already: a second interrupt
+              // must not cut the wait short
+              while (!pool.isTerminated)
+                try pool.awaitTermination(1, java.util.concurrent.TimeUnit.SECONDS)
+                catch { case _: InterruptedException => () }
+              throw ie
+          }
         settled.flatten.headOption.foreach(e => throw e)
       } finally {
         pool.shutdown()

@@ -782,7 +782,10 @@ object Serving {
     * Scale shape: two index searches (each reads only pruned
     * directories; the corpus never shuffles — query frames broadcast
     * onto the pruned scans) + a fusion over ≤ 2 × |queries| × perLegK
-    * rows. `nprobe` is the semantic leg's usual recall dial.
+    * rows. `nprobe` is the semantic leg's usual recall dial. Building
+    * the frame runs at most two Spark jobs, each leg's one bounded
+    * query-side collect (none for a query frame built on the driver),
+    * and leaves nothing persisted.
     *
     * `fusion` picks the combiner: `"rrf"` (rank-based — scales never
     * need normalizing; the default, ES's hybrid default) fuses via

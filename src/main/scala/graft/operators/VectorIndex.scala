@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.VectorOps
 import graft.plans.VectorExpressions
 
@@ -189,6 +190,10 @@ object VectorIndex {
       // reads of the same persisted staged frame landing in different
       // dirs — overlap them (guide §2.6); stats stays LAST (the
       // commit marker), so crash-safety is unchanged
+      val ids = staged.select(col("id"), col("cell"))
+      val codes = readPqModel(docs.sparkSession, indexPath).map(m =>
+        staged.select(col("id"), col("cell"),
+          Quantization.pqEncode(col("v"), m).as("codes")))
       val writes = Seq(
         () => SegmentStore.labeled(ss, "vec seg: vectors write")(
           // repartition by cell before partitionBy: otherwise every
@@ -200,24 +205,22 @@ object VectorIndex {
             .write.mode("overwrite").partitionBy("cell")
             .parquet(s"$seg/vectors")),
         () => SegmentStore.labeled(ss, "vec seg: ids write")(
-          staged.select(col("id"), col("cell"))
-            .write.mode("overwrite").parquet(s"$seg/ids"))) ++
+          ids.write.mode("overwrite").parquet(s"$seg/ids"))) ++
         // a PQ-enabled index (build(pqM > 0)) carries a codes table per
         // segment — the m-small-ints-per-row thing ADC search scans
         // instead of the vectors; written before stats, so the
         // segment's commit marker covers it
-        readPqModel(docs.sparkSession, indexPath).map { m => () =>
+        codes.map { c => () =>
           SegmentStore.labeled(ss, "vec seg: codes write")(
-            staged.select(col("id"), col("cell"),
-                Quantization.pqEncode(col("v"), m).as("codes"))
-              .repartition(centroids.length, col("cell"))
+            c.repartition(centroids.length, col("cell"))
               .write.mode("overwrite").partitionBy("cell")
               .parquet(s"$seg/codes"))
         }.toSeq
       SegmentStore.inParallel(writes)
       // stats from the contract-check agg above — a driver-side doc
       // (marker last), no second pass over staged (r17-opt)
-      writeVecStats(ss, seg, r.getLong(0).toDouble, centroids.length)
+      writeVecStats(ss, seg, r.getLong(0).toDouble, centroids.length,
+        payloadSchemas(staged, ids, codes))
     } finally {
       staged.unpersist()
       ()
@@ -230,12 +233,28 @@ object VectorIndex {
     writeSegmentNamed(docs, idCol, vecCol, indexPath,
       s"seg-${java.util.UUID.randomUUID()}", centroids)
 
+  /** The segment's commit doc: n, nlist, and the read schema of each
+    * payload dir (see [[SegmentStore.readPayload]]).
+    */
   private def writeVecStats(spark: SparkSession, seg: String, n: Double,
-                            nlist: Int): Unit =
+                            nlist: Int,
+                            schemas: Seq[(String, StructType)]): Unit =
     SegmentStore.writeDocDir(fsOf(spark, seg), s"$seg/stats",
       org.json4s.JObject(
         "n" -> org.json4s.JDouble(n),
-        "nlist" -> org.json4s.JInt(nlist)))
+        "nlist" -> org.json4s.JInt(nlist),
+        SegmentStore.schemaField(schemas)))
+
+  /** Read schemas of a segment's `vectors` (cell-partitioned), `ids`
+    * and, on a PQ index, `codes` (cell-partitioned) — from the frames
+    * the writes consume.
+    */
+  private def payloadSchemas(vectors: DataFrame, ids: DataFrame,
+                             codes: Option[DataFrame])
+      : Seq[(String, StructType)] =
+    Seq("vectors" -> SegmentStore.writtenSchema(vectors, Seq("cell")),
+      "ids" -> SegmentStore.writtenSchema(ids)) ++
+      codes.map(c => "codes" -> SegmentStore.writtenSchema(c, Seq("cell")))
 
   /** One committed segment's (n, nlist), read DRIVER-SIDE — the stats
     * sidecar is a JSON doc since r17-opt; legacy parquet stats dirs
@@ -667,7 +686,10 @@ object VectorIndex {
     fresh.repartition(cents.length, col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$seg/vectors")
-    val written = spark.read.parquet(s"$seg/vectors").select("id", "cell")
+    val vectors = spark.read
+      .schema(SegmentStore.writtenSchema(fresh, Seq("cell")))
+      .parquet(s"$seg/vectors")
+    val written = vectors.select("id", "cell")
     // one count serves the ids-ledger bucket sizing (0 = auto, the
     // compact() formula) and the stats doc
     val n = written.count()
@@ -677,15 +699,14 @@ object VectorIndex {
     Bucketing.saveBucketedBatch(
       written.repartition(ib, col("id")),
       s"$seg/ids", Seq("id"), ib)
-    readPqModel(spark, indexPath).foreach { m =>
-      spark.read.parquet(s"$seg/vectors")
-        .select(col("id"), col("cell"),
-          Quantization.pqEncode(col("v"), m).as("codes"))
-        .repartition(cents.length, col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$seg/codes")
-    }
-    writeVecStats(spark, seg, n.toDouble, newNlist)
+    val codes = readPqModel(spark, indexPath).map(m =>
+      vectors.select(col("id"), col("cell"),
+        Quantization.pqEncode(col("v"), m).as("codes")))
+    codes.foreach(_.repartition(cents.length, col("cell"))
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$seg/codes"))
+    writeVecStats(spark, seg, n.toDouble, newNlist,
+      payloadSchemas(vectors, written, codes))
     // promote, then retire the inputs — heal replays this tail
     fs.delete(new org.apache.hadoop.fs.Path(quantizerPath(indexPath)), true)
     require(fs.rename(new org.apache.hadoop.fs.Path(nextPath),
@@ -742,8 +763,10 @@ object VectorIndex {
       live.repartition(nlist, col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$seg/vectors")
-      val written = spark.read.parquet(s"$seg/vectors")
-        .select("id", "cell")
+      val vectors = spark.read
+        .schema(SegmentStore.writtenSchema(live, Seq("cell")))
+        .parquet(s"$seg/vectors")
+      val written = vectors.select("id", "cell")
       // ONE count serves the ids-ledger bucket sizing AND the stats
       // doc below; bucket count from the LIVE corpus size when the
       // caller passed 0 (auto) — probe parallelism should track the
@@ -752,6 +775,12 @@ object VectorIndex {
       val ib =
         if (idBuckets > 0) idBuckets
         else math.min(256, math.max(8, (n / 100000.0).ceil.toInt))
+      // PQ-enabled: re-encode the merged segment's codes from its
+      // own just-written vectors (a pruned read of the new segment,
+      // not a second pass over the inputs)
+      val codes = readPqModel(spark, indexPath).map(m =>
+        vectors.select(col("id"), col("cell"),
+          Quantization.pqEncode(col("v"), m).as("codes")))
       // the ids ledger and the PQ codes both derive from the
       // just-written vectors and are independent of each other —
       // overlap them (guide §2.6); stats stays last
@@ -759,18 +788,13 @@ object VectorIndex {
         () => Bucketing.saveBucketedBatch(
           written.repartition(ib, col("id")),
           s"$seg/ids", Seq("id"), ib)) ++
-        // PQ-enabled: re-encode the merged segment's codes from its
-        // own just-written vectors (a pruned read of the new segment,
-        // not a second pass over the inputs)
-        readPqModel(spark, indexPath).map { m => () =>
-          spark.read.parquet(s"$seg/vectors")
-            .select(col("id"), col("cell"),
-              Quantization.pqEncode(col("v"), m).as("codes"))
-            .repartition(nlist, col("cell"))
+        codes.map { c => () =>
+          c.repartition(nlist, col("cell"))
             .write.mode("overwrite").partitionBy("cell")
             .parquet(s"$seg/codes")
         }.toSeq)
-      writeVecStats(spark, seg, n.toDouble, nlist)
+      writeVecStats(spark, seg, n.toDouble, nlist,
+        payloadSchemas(vectors, written, codes))
       (segs ++ dels).foreach(s =>
         fs.delete(new org.apache.hadoop.fs.Path(s), true))
       Manifest.delete(fs, SegmentStore.manifestPath(indexPath))
@@ -797,7 +821,7 @@ object VectorIndex {
                       dels: Seq[String], sub: String,
                       prune: DataFrame => DataFrame): DataFrame = {
     val tagged = segs.map(s =>
-      prune(spark.read.parquet(s"$s/$sub"))
+      prune(SegmentStore.readPayload(spark, s, sub))
         .withColumn("_seg", lit(new org.apache.hadoop.fs.Path(s).getName)))
       .reduce(_ unionByName _)
     val out =
@@ -861,11 +885,15 @@ object VectorIndex {
   /** Serve a whole query frame: (qIdCol, rank, idColName, cos) for
     * rank ≤ k per query, cosine rounded to `roundTo` with id
     * tiebreak. Each query probes its `nprobe` nearest cells; the
-    * union of probed cells (≤ nlist ints, collected from a tiny
-    * distinct-agg over the query frame) prunes the vectors scan's
+    * union of probed cells (≤ nlist ints) prunes the vectors scan's
     * partition directories; `nprobe = nlist` is exact brute force.
     * Queries are broadcast — the workload contract is a modest query
-    * frame against an arbitrarily large index.
+    * frame against an arbitrarily large index — so the probe side
+    * (queries × nprobe rows) is collected ONCE and re-enters the plan
+    * as a local relation: the probed cells come from the collected
+    * rows and nothing stays persisted after the call. That collect is
+    * the call's only possible Spark job, and a query frame built on
+    * the driver (a local relation) needs none.
     */
   /** `filterIds`: ES 8 `knn.filter` — restrict candidates to an id
     * set BEFORE ranking (a single-column frame; the filter typically
@@ -909,18 +937,24 @@ object VectorIndex {
     // index built with nlist = 1
     val np = math.min(nprobe, nlist)
     // per-query probe cells via the deterministic (score, cell) struct
-    // sort of Similarity.ivfTopK; pinned — reused for the driver-side
-    // cell collection AND the broadcast join side
-    val q = queries
+    // sort of Similarity.ivfTopK, collected once and exploded here: the
+    // rows serve the driver-side cell set AND the broadcast join side.
+    // A pure projection, so a query frame built on the driver folds
+    // into a local relation and the collect runs no job at all.
+    val probed = queries
       .select(col(qIdCol).as("_q_id"),
         VectorOps.asDouble(col(vecCol)).as("q_v"))
       .withColumn("probes", Similarity.ivfProbeCells(col("q_v"),
         centroids, np))
-      .select(col("_q_id"), col("q_v"), explode(col("probes")).as("cell"))
       .withColumn("q_n", sqrt(VectorOps.normSq(col("q_v"))))
-      .localCheckpoint(true)
+    val probeRows = probed.collect().toSeq.flatMap(r =>
+      r.getSeq[Int](2).map(cell =>
+        org.apache.spark.sql.Row(r.get(0), r.get(1), cell, r.get(3))))
+    val q = spark.createDataFrame(java.util.Arrays.asList(probeRows: _*),
+      probed.select(col("_q_id"), col("q_v"),
+        explode(col("probes")).as("cell"), col("q_n")).schema)
     // bounded driver state: the distinct probed-cell set is ≤ nlist
-    val wanted = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
+    val wanted = probeRows.map(_.getInt(2)).distinct
     val c0 = liveVectors(spark, segs, dels,
       _.filter(col("cell").isin(wanted: _*)))
     val c = filterIds.fold(c0)(f =>

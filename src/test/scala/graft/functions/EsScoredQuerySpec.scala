@@ -233,35 +233,25 @@ class EsScoredQuerySpec extends AnyFunSuite {
     // crossJoin, not an eager per-field .head(): at 100TB an eager
     // stats job doubles the scan cost of every scored query AND runs
     // even for a frame the caller never executes
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
     // pin the input first so lazy-building can't be confused with
     // input-side jobs (schema inference etc.)
     val pinned = docs
     pinned.schema // force resolution outside the measured window
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val frame = scored(pinned,
-        """{"bool": {"must": [{"match": {"text": "stream filter"}}],
-             "should": [{"match": {"text": "join"}}]}}""")
-      // a phrase clause must stay equally lazy: its per-term dfs and
-      // token totals ride the same broadcast-crossJoin discipline
-      val phraseFrame = scored(pinned,
-        """{"bool": {"should": [
-             {"match_phrase": {"text": "stream filter"}},
-             {"match": {"text": "join"}}]}}""")
-      // listener events are async; give stragglers time to land
-      Thread.sleep(1500)
-      assert(counter.get == 0,
-        s"building the scored frames launched ${counter.get} job(s)")
-      assert(frame.limit(1).count() >= 0) // the frames still execute fine
-      assert(phraseFrame.limit(1).count() >= 0)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val ((frame, phraseFrame), jobs) =
+      org.apache.spark.TestJobs.jobsDuring(spark) {
+        (scored(pinned,
+          """{"bool": {"must": [{"match": {"text": "stream filter"}}],
+               "should": [{"match": {"text": "join"}}]}}"""),
+        // a phrase clause must stay equally lazy: its per-term dfs and
+        // token totals ride the same broadcast-crossJoin discipline
+        scored(pinned,
+          """{"bool": {"should": [
+               {"match_phrase": {"text": "stream filter"}},
+               {"match": {"text": "join"}}]}}"""))
+      }
+    assert(jobs == 0, s"building the scored frames launched $jobs job(s)")
+    assert(frame.limit(1).count() >= 0) // the frames still execute fine
+    assert(phraseFrame.limit(1).count() >= 0)
   }
 
   test("function_score: filter-gated weight + field_value_factor," +
@@ -561,23 +551,12 @@ class EsScoredQuerySpec extends AnyFunSuite {
       .select("_score").head().getDouble(0)
     assert(const == 1.0)
     // and building the idf-scored frame is still fully lazy
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
     val pinned = docs
     pinned.schema
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val (_, jobs) = org.apache.spark.TestJobs.jobsDuring(spark)(
       EsScoredQuery.scoredFrame(pinned, "doc_id",
-        """{"term": {"lang": "en"}}""", termIdf = true)
-      Thread.sleep(1500)
-      assert(counter.get == 0,
-        s"building the idf-scored frame launched ${counter.get} job(s)")
-    } finally spark.sparkContext.removeSparkListener(l)
+        """{"term": {"lang": "en"}}""", termIdf = true))
+    assert(jobs == 0, s"building the idf-scored frame launched $jobs job(s)")
   }
 
   test("rescore: window cut, non-match arm, and every score mode agree " +

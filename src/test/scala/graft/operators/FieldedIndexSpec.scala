@@ -234,4 +234,19 @@ class FieldedIndexSpec extends AnyFunSuite {
         s"term filter not pushed on ${s.relation.location.rootPaths}")
     }
   }
+
+  test("one field's failed write leaves its sibling settled before " +
+      "the call returns") {
+    val root = tmp("graft-fidx-sibling")
+    // `bad` is a struct: its field build fails at once on analysis,
+    // while the text field's build still has its jobs to run
+    val docs = corpus().withColumn("bad", struct(col("doc_id")))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      FieldedIndex.build(docs, "doc_id", Seq("text", "bad"), root)
+    }
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a sibling field was still writing when build() returned")
+    assert(InvertedIndex.committedSegments(spark, s"$root/fields/text")
+      .size == 1)
+  }
 }

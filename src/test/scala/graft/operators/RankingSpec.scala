@@ -113,4 +113,29 @@ class RankingSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Ranking.bm25fTopK(docs, "id", Seq("title" -> 0.5), Seq("cat"), 5))
   }
+
+  test("bm25fTopK: a null field holds no tokens — the doc keeps its " +
+      "matches in its other fields") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val withNull = Seq[(Long, String, String)](
+      (1L, null, "cat pad pad"),
+      (2L, null, "cat cat pad")).toDF("id", "title", "body")
+    val titleDropped = withNull.drop("title")
+    def scores(docs: org.apache.spark.sql.DataFrame,
+               fields: Seq[(String, Double)]): Map[Long, Double] =
+      Ranking.bm25fTopK(docs, "id", fields, Seq("cat"), k = 5)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = scores(withNull, Seq("title" -> 2.0, "body" -> 1.0))
+    assert(got.keySet == Set(1L, 2L), got)
+    assert(got == scores(titleDropped, Seq("body" -> 1.0)))
+    // one null title among populated ones: that doc scores from its
+    // body alone, the length sum counting the null field as empty
+    val mixed = Seq[(Long, String, String)](
+      (1L, null, "cat pad pad"),
+      (2L, "", "cat pad pad"),
+      (3L, "dog", "pad")).toDF("id", "title", "body")
+    val m = scores(mixed, Seq("title" -> 2.0, "body" -> 1.0))
+    assert(m.keySet == Set(1L, 2L) && m(1L) == m(2L), m)
+  }
 }

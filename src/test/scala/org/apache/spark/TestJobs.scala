@@ -1,0 +1,29 @@
+package org.apache.spark
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+
+/** Counts the Spark jobs a block of code starts. The listener bus is
+  * drained before the counter joins, so events of earlier work are not
+  * counted, and again before it leaves, so every job `body` started is.
+  * The drain (`listenerBus.waitUntilEmpty`) is private[spark], hence
+  * this package.
+  */
+object TestJobs {
+  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        started.incrementAndGet(); ()
+      }
+    }
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(counter)
+    try {
+      val out = body
+      sc.listenerBus.waitUntilEmpty()
+      (out, started.get)
+    } finally sc.removeSparkListener(counter)
+  }
+}
