@@ -122,7 +122,7 @@ object Decontam {
       .join(benchGrams, Seq("_gram"))
       .groupBy(idCol)
       .agg(count_distinct(col("_gram")).cast("long").as("n_hit_ngrams"))
-    Dedup.materializeAndRelease(benchGrams, report)
+    Dedup.releaseAfter(report.persist(), Seq(benchGrams))
   }
 
   /** Embedding-space decontamination — the semantic sibling of the

@@ -23,63 +23,29 @@ import graft.plans.VectorExpressions
   */
 object Dedup {
 
-  /** Persist `result` and release the staged intermediate cache after
-    * the FIRST caller action that actually executes `result` — without
-    * forcing an eager job here (an eager `count()` double-executed the
-    * whole pair pipeline and cost dd4 +52% / dd2 +20% wall at sf0.1).
+  /** Unpersist `staged` frames once the FIRST successful action whose
+    * plan contains `result` completes — without forcing an eager job
+    * here (an eager `count()` double-executed the whole pair pipeline
+    * and cost dd4 +52% / dd2 +20% wall at sf0.1).
     *
     * Mechanism: a one-shot QueryExecutionListener watches completed
     * query executions; when one's analyzed plan contains `result`'s
-    * plan (sameResult), the first action has populated `result`'s
-    * cache through `staged`, so `staged` can be unpersisted and the
-    * listener removed. The API stays fully lazy; repeated pipeline
-    * runs in a long-lived session do not accumulate intermediate
-    * cache blocks. Callers own the RETURNED frame's `unpersist()` (it
-    * is the small candidate-pair table, LRU-evictable if they don't);
-    * if a caller never executes `result`, `staged` stays cached until
-    * LRU eviction — the lazy-API trade, documented.
-    */
-  private[operators] def materializeAndRelease(staged: DataFrame, result: DataFrame): DataFrame = {
-    val out = result.persist()
-    val spark = result.sparkSession
-    val target = out.queryExecution.analyzed
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-      private def maybeRelease(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
-        // stay ARMED on comparison errors: releasing early would strand
-        // `result` uncached with `staged` gone, re-running the whole
-        // signature pipeline per downstream read; an un-released staged
-        // frame is merely LRU-evictable memory
-        val touches =
-          try qe.analyzed.exists(p => p.sameResult(target))
-          catch { case _: Throwable => false }
-        if (touches && released.compareAndSet(false, true)) {
-          staged.unpersist(false)
-          spark.listenerManager.unregister(this)
-        }
-      }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        maybeRelease(qe)
-      // a FAILED action did not populate result's cache — keep the
-      // staged cache and the listener armed so the retry still gets the
-      // barrier; the next successful action releases
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
-        ()
-    }
-    spark.listenerManager.register(listener)
-    out
-  }
-
-  /** Unpersist `staged` frames once the FIRST successful action whose
-    * plan contains `result` completes — [[materializeAndRelease]]'s
-    * listener without persisting the result itself: for facades whose
-    * result feeds exactly one terminal action (a gate's noop write,
-    * the oracle write), the staged inputs die with that action instead
-    * of lingering until LRU eviction (r18; closes the r17-ADVICE pipe3
-    * leak). A SECOND action on the result recomputes the chain — the
-    * documented "persists live and die inside one execution" contract.
+    * plan (sameResult), that action has consumed `staged`, so it is
+    * unpersisted and the listener removed. The API stays fully lazy;
+    * repeated pipeline runs in a long-lived session do not accumulate
+    * intermediate cache blocks.
+    *
+    * Callers whose result is read more than once pass it persisted
+    * (`releaseAfter(out.persist(), Seq(staged))`): the first action
+    * fills the result's cache through `staged`, and the caller owns
+    * the returned frame's `unpersist()` (it is the small candidate-pair
+    * table, LRU-evictable if they don't). For a result that feeds
+    * exactly one terminal action (a gate's noop write, the oracle
+    * write), the staged inputs die with that action; a SECOND action
+    * recomputes the chain — the documented "persists live and die
+    * inside one execution" contract. If a caller never executes
+    * `result`, `staged` stays cached until LRU eviction — the lazy-API
+    * trade, documented.
     */
   private[graft] def releaseAfter(result: DataFrame,
                                   staged: Seq[DataFrame]): DataFrame = {
@@ -88,6 +54,10 @@ object Dedup {
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
       private def maybeRelease(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
+        // stay ARMED on comparison errors: releasing early would strand
+        // a persisted `result` uncached with `staged` gone, re-running
+        // the whole staged pipeline per downstream read; an un-released
+        // staged frame is merely LRU-evictable memory
         val touches =
           try qe.analyzed.exists(p => p.sameResult(target))
           catch { case _: Throwable => false }
@@ -100,7 +70,8 @@ object Dedup {
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
         maybeRelease(qe)
       // a FAILED action may not have populated the downstream work —
-      // keep the staged caches so the retry still gets the barrier
+      // keep the staged caches and the listener armed so the retry
+      // still gets the barrier; the next successful action releases
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
         ()
@@ -1001,7 +972,7 @@ object Dedup {
           .select(col("id_a"), col("id_b"), estJaccard)
           .filter(col("est_jaccard") >= threshold)
       }
-    materializeAndRelease(withSig, pairs)
+    releaseAfter(pairs.persist(), Seq(withSig))
   }
 
   /** SimHash near-duplicate pairs by hamming radius — the Manku et
@@ -1120,7 +1091,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("ham"))
       .filter(col("ham") <= maxHamming)
-    materializeAndRelease(sigs, pairs)
+    releaseAfter(pairs.persist(), Seq(sigs))
   }
 
   /** Perceptual near-duplicate IMAGE pairs — the multimodal leg of
@@ -1306,7 +1277,7 @@ object Dedup {
         array_max(zip_with(col("_fha"), col("_fhb"),
           (a, b) => bit_count(a.bitwiseXOR(b)))).as("max_ham"))
       .filter(col("max_ham") <= maxHamming)
-    materializeAndRelease(fp, pairs)
+    releaseAfter(pairs.persist(), Seq(fp))
   }
 
   /** Greedy near-dup drop list from candidate pairs: a doc is dropped
@@ -1610,7 +1581,8 @@ object Dedup {
           .orderBy(col("_dc_nt").desc, col("_dc_id"))))
       .filter(col("_dc_rk") > 1)
       .select(col("_dc_id").as(idCol))
-    materializeAndRelease(exact, exact.join(losers, Seq(idCol), "left_anti"))
+    releaseAfter(exact.join(losers, Seq(idCol), "left_anti").persist(),
+      Seq(exact))
   }
 
   /** C4/CCNet-style line-level boilerplate removal: a LINE occurring
@@ -1671,7 +1643,7 @@ object Dedup {
       .select(col("id"), col("n_lines"),
         coalesce(col("n_lines_clean"), lit(0L)).as("n_lines_clean"),
         coalesce(col("text_clean"), lit("")).as("text_clean"))
-    materializeAndRelease(lines, out)
+    releaseAfter(out.persist(), Seq(lines))
   }
 
   /** C4's line-level cleanup rules (Raffel et al. JMLR'20 §2.2 — the
@@ -1762,7 +1734,7 @@ object Dedup {
       .join(sh.select(col("_jid").as("id_b"), col("_jsh").as("sh_b"),
         col("_jn").as("n_b")), Seq("id_b")))
       .drop("sh_a", "sh_b", "n_a", "n_b")
-    materializeAndRelease(sh, out)
+    releaseAfter(out.persist(), Seq(sh))
   }
 
   /** Blocked all-pairs n-gram Jaccard: one self-join of the shingle-set
@@ -1792,7 +1764,7 @@ object Dedup {
             (col("n_a") + col("n_b") - col("_inter")))
           .otherwise(lit(0.0)))
       .select("id_a", "id_b", "jaccard")
-    materializeAndRelease(sh, out)
+    releaseAfter(out.persist(), Seq(sh))
   }
 
   /** Broder-style n-gram CONTAINMENT (Broder 1997, "On the resemblance
@@ -1829,7 +1801,7 @@ object Dedup {
       .join(sh.select(col("_cid").as("id_b"), col("_csh").as("sh_b"),
         col("_cn").as("n_b")), Seq("id_b")))
       .drop("sh_a", "sh_b", "n_a", "n_b")
-    materializeAndRelease(sh, out)
+    releaseAfter(out.persist(), Seq(sh))
   }
 
   /** [[ngramContainment]] over all pairs within a metadata block —
@@ -1851,7 +1823,7 @@ object Dedup {
     val out = withContainment(
       l.join(r, Seq("_blk")).filter(col("id_a") < col("id_b")))
       .select("id_a", "id_b", "containment_a", "containment_b")
-    materializeAndRelease(sh, out)
+    releaseAfter(out.persist(), Seq(sh))
   }
 
   /** Shared containment arithmetic over a joined pair frame carrying
@@ -1928,7 +1900,7 @@ object Dedup {
         VectorExpressions.dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
-    materializeAndRelease(e, pairs)
+    releaseAfter(pairs.persist(), Seq(e))
   }
 
   /** Embedding-cosine near-duplicate pairs within a blocking column

@@ -93,15 +93,10 @@ object FieldedIndex {
     require(fs.exists(new org.apache.hadoop.fs.Path(
         s"${metaPath(root)}/_SUCCESS")),
       s"$root has no _fields_meta — build() a fielded index first")
-    SegmentStore.readDocDir(fs, metaPath(root)) match {
-      case Some(doc) => (doc \ "fields") match {
-        case org.json4s.JArray(xs) =>
-          xs.collect { case org.json4s.JString(f) => f }
-        case other => sys.error(s"malformed _fields_meta doc: $other")
-      }
-      case None => // a parquet meta table (older builds)
-        spark.read.parquet(metaPath(root))
-          .select("fields").head().getString(0).split(",").toSeq
+    (SegmentStore.readDocDir(fs, metaPath(root)) \ "fields") match {
+      case org.json4s.JArray(xs) =>
+        xs.collect { case org.json4s.JString(f) => f }
+      case other => sys.error(s"malformed _fields_meta doc: $other")
     }
   }
 

@@ -228,70 +228,36 @@ object InvertedIndex {
         "analyzer" -> org.json4s.JString(analyzer),
         SegmentStore.schemaField(schemas)))
 
-  /** One committed segment's stats, read DRIVER-SIDE (no Spark job —
-    * the stats sidecar is one JSON doc since r17-opt; a legacy parquet
-    * stats dir reads through the Spark fallback). Missing fields
-    * follow the mixed-generation rules: absent positions reads false,
-    * absent analyzer reads "standard".
+  /** One committed segment's stats, read DRIVER-SIDE from its stats
+    * doc (no Spark job).
     */
   private[operators] final case class SegStatsDoc(n: Double, sumLen: Double,
                                                   buckets: Int,
                                                   positions: Boolean,
                                                   analyzer: String)
 
-  private def readSegStats(spark: SparkSession, seg: String): SegStatsDoc =
-    SegmentStore.readDocDir(fsOf(spark, seg), s"$seg/stats") match {
-      case Some(doc) =>
-        val analyzer = (doc \ "analyzer") match {
-          case org.json4s.JString(s) => s
-          case _ => "standard"
-        }
-        val positions = (doc \ "positions") match {
-          case org.json4s.JBool(b) => b
-          case _ => false
-        }
+  private def readSegStats(spark: SparkSession, seg: String): SegStatsDoc = {
+    val stats = s"$seg/stats"
+    val doc = SegmentStore.readDocDir(fsOf(spark, seg), stats)
+    (doc \ "positions", doc \ "analyzer") match {
+      case (org.json4s.JBool(positions), org.json4s.JString(analyzer)) =>
         SegStatsDoc(SegmentStore.docDouble(doc, "n"),
           SegmentStore.docDouble(doc, "sum_len"),
           SegmentStore.docDouble(doc, "buckets").toInt,
           positions, analyzer)
-      case None => // legacy parquet one-row stats
-        val r = SegmentStore.labeled(spark, "idx: legacy stats read")(
-          spark.read.parquet(s"$seg/stats").collect().head)
-        val fields = r.schema.fieldNames
-        val positions = fields.contains("positions") &&
-          !r.isNullAt(r.fieldIndex("positions")) &&
-          r.getBoolean(r.fieldIndex("positions"))
-        val analyzer =
-          if (fields.contains("analyzer") &&
-              !r.isNullAt(r.fieldIndex("analyzer")))
-            r.getString(r.fieldIndex("analyzer"))
-          else "standard"
-        SegStatsDoc(r.getAs[Double]("n"), r.getAs[Double]("sum_len"),
-          r.getAs[Int]("buckets"), positions, analyzer)
+      case _ => throw SegmentStore.olderLayout(stats,
+        "no recorded positions/analyzer")
     }
+  }
 
   /** A committed tombstone batch's charged moments (n, sum_len) —
-    * driver-side doc read with the legacy parquet fallback (a legacy
-    * vector-index tombstone has no sum_len; reads 0).
+    * driver-side doc read.
     */
   private def readDelStats(spark: SparkSession,
-                           del: String): (Double, Double) =
-    SegmentStore.readDocDir(fsOf(spark, del), s"$del/stats") match {
-      case Some(doc) =>
-        val sl = (doc \ "sum_len") match {
-          case org.json4s.JNothing => 0.0
-          case _ => SegmentStore.docDouble(doc, "sum_len")
-        }
-        (SegmentStore.docDouble(doc, "n"), sl)
-      case None =>
-        val r = SegmentStore.labeled(spark, "idx: legacy tomb stats read")(
-          spark.read.parquet(s"$del/stats").collect().head)
-        val sl =
-          if (r.schema.fieldNames.contains("sum_len"))
-            r.getAs[Double]("sum_len")
-          else 0.0
-        (r.getAs[Double]("n"), sl)
-    }
+                           del: String): (Double, Double) = {
+    val doc = SegmentStore.readDocDir(fsOf(spark, del), s"$del/stats")
+    (SegmentStore.docDouble(doc, "n"), SegmentStore.docDouble(doc, "sum_len"))
+  }
 
   /** (buckets, positions, analyzer) of an existing index — one
     * driver-side stats-doc read of the first committed segment.
@@ -2091,8 +2057,8 @@ object InvertedIndex {
       new org.apache.hadoop.fs.Path(s"$indexPath/vocab/_SUCCESS")),
       s"$indexPath has no committed vocabulary sidecar — " +
         "buildVocabulary() first")
-    require(fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexPath/vocab_segments/_SUCCESS")),
+    val fpDir = s"$indexPath/vocab_segments"
+    require(fs.exists(new org.apache.hadoop.fs.Path(s"$fpDir/_SUCCESS")),
       s"$indexPath/vocab has no segment fingerprint (built by an " +
         "older version, or the build crashed) — buildVocabulary() again")
     val segs = preListedSegs.getOrElse {
@@ -2101,18 +2067,12 @@ object InvertedIndex {
         s"$indexPath has no committed segments — build() first")
       listed
     }
-    // the fingerprint doc; a parquet one (older builds) reads through
-    // Spark
-    val doc = SegmentStore.readDocDir(fs, s"$indexPath/vocab_segments")
-    val recorded = doc.fold(
-        spark.read.parquet(s"$indexPath/vocab_segments")
-          .collect().map(_.getString(0)).toSeq) { d =>
-        (d \ "segments") match {
-          case org.json4s.JArray(xs) =>
-            xs.collect { case org.json4s.JString(x) => x }
-          case other => sys.error(s"malformed vocab_segments doc: $other")
-        }
-      }.sorted
+    val doc = SegmentStore.readDocDir(fs, fpDir)
+    val recorded = ((doc \ "segments") match {
+      case org.json4s.JArray(xs) =>
+        xs.collect { case org.json4s.JString(x) => x }
+      case other => sys.error(s"malformed vocab_segments doc: $other")
+    }).sorted
     require(recorded == segNames(segs),
       s"$indexPath/vocab is STALE: it was built from segments " +
         s"$recorded but the index now has ${segNames(segs)} — " +
@@ -2127,8 +2087,9 @@ object InvertedIndex {
     // job each); the sidecar is range-partitioned by term, so a
     // prefix's terms sit in one or two files and the driver receives
     // about cap + 1 terms at most
-    val cand = SegmentStore.readWithSchema(spark, s"$indexPath/vocab",
-        doc.flatMap(SegmentStore.recordedSchema(_, "vocab")))
+    val cand = spark.read
+      .schema(SegmentStore.recordedSchema(doc, fpDir, "vocab"))
+      .parquet(s"$indexPath/vocab")
       .filter(col("term") >= p && col("term") < p + '￿')
       .filter(col("term").startsWith(p))
       .select(col("term")).as(org.apache.spark.sql.Encoders.STRING)

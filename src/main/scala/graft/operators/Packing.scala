@@ -114,7 +114,7 @@ object Packing {
           r.toSeq ++ Seq(before, before / budget))
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
-    Dedup.materializeAndRelease(sorted, out)
+    Dedup.releaseAfter(out.persist(), Seq(sorted))
   }
 
   /** Materialize the packed TRAINING SEQUENCES [[packByBudget]] lays

@@ -116,7 +116,7 @@ object Sampling {
     }(org.apache.spark.sql.Encoders.row(outSchema))
     val out = df.join(ordinals, col(idCol) === col("_id"))
       .drop("_id")
-    Dedup.materializeAndRelease(keyed, out)
+    Dedup.releaseAfter(out.persist(), Seq(keyed))
   }
 
   /** Exact n-per-stratum sample: within each stratum, keep the
@@ -330,7 +330,7 @@ object Sampling {
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
     val out = df.join(kept, col(idCol) === col("_id"), "left_semi")
-    Dedup.materializeAndRelease(keyed, out)
+    Dedup.releaseAfter(out.persist(), Seq(keyed))
   }
 
   /** Export the dataset as fixed-size TRAINING SHARDS in a

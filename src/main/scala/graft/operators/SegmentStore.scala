@@ -32,8 +32,10 @@ import org.json4s.JValue
   * opening a directory costs no schema-inference job: a search call
   * builds its whole plan on the driver and runs no Spark job before
   * the caller's action (the bounded query-side collects of the batch
-  * and vector searches aside). Dirs whose doc has no `schema` (every
-  * layout written before it existed) read through inference.
+  * and vector searches aside). That doc is the only on-disk form: a
+  * dir committed without one (a parquet sidecar), or whose doc records
+  * no `schema`, was written by an older graft layout and is refused
+  * with an `IllegalStateException` naming it — rebuild with `build()`.
   */
 private[graft] object SegmentStore {
 
@@ -87,13 +89,12 @@ private[graft] object SegmentStore {
   // Writing/reading them as Spark parquet jobs cost a scheduler
   // round-trip PER PROBE — at micro-batch cadence that was most of the
   // index-lifecycle gates' job count, and on a real cluster it is pure
-  // overhead too (one row never needs executors). They are now a
-  // single JSON document + the same `_SUCCESS` marker, written and
-  // read with plain FS calls; the marker file is still created LAST,
-  // so every commit-discipline reader (committedUnder, heal, the
-  // crash specs) sees exactly the layout it always did. Legacy
-  // parquet-stats dirs (pre-refactor indexes) read through fallbacks
-  // in the index modules.
+  // overhead too (one row never needs executors). They are a single
+  // JSON document + the same `_SUCCESS` marker, written and read with
+  // plain FS calls; the marker file is still created LAST, so every
+  // commit-discipline reader (committedUnder, heal, the crash specs)
+  // sees exactly the layout it always did. A committed dir with no
+  // doc (a parquet sidecar of an older layout) is refused.
 
   /** Write `json` as `dir/doc.json` and then `dir/_SUCCESS` — the
     * marker lands strictly last, like the parquet committer's.
@@ -111,26 +112,40 @@ private[graft] object SegmentStore {
     fs.create(new org.apache.hadoop.fs.Path(d, "_SUCCESS"), true).close()
   }
 
-  /** The parsed `doc.json` of a [[writeDocDir]] directory, or None for
-    * a legacy (parquet) dir — callers fall back to the Spark read.
+  /** The refusal of a store dir in an older graft layout. */
+  def olderLayout(dir: String, what: String): IllegalStateException =
+    new IllegalStateException(s"$dir was written by an older graft " +
+      s"layout ($what) — rebuild the index with build()")
+
+  /** The parsed `doc.json` of a [[writeDocDir]] directory. A dir with
+    * `_SUCCESS` but no doc is an older layout's parquet sidecar and is
+    * refused ([[olderLayout]]); a dir with neither was never committed
+    * and fails with `absent`. The marker is probed only on that failure
+    * path, so a read costs one existence check.
     */
-  def readDocDir(fs: org.apache.hadoop.fs.FileSystem,
-                 dir: String): Option[org.json4s.JValue] = {
+  def readDocDir(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                 absent: => String): JValue = {
     val f = new org.apache.hadoop.fs.Path(s"$dir/doc.json")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      val bytes = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](4096)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        buf.toByteArray
-      } finally in.close()
-      Some(org.json4s.jackson.JsonMethods.parse(
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
+    if (!fs.exists(f)) {
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")))
+        throw olderLayout(dir, "no doc.json commit doc")
+      throw new IllegalArgumentException(absent)
     }
+    val in = fs.open(f)
+    val bytes = try {
+      val buf = new java.io.ByteArrayOutputStream()
+      val tmp = new Array[Byte](4096)
+      var n = in.read(tmp)
+      while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
+      buf.toByteArray
+    } finally in.close()
+    org.json4s.jackson.JsonMethods.parse(
+      new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
   }
+
+  /** [[readDocDir]] of a dir a commit listing returned. */
+  def readDocDir(fs: org.apache.hadoop.fs.FileSystem, dir: String): JValue =
+    readDocDir(fs, dir, s"$dir has no commit doc")
 
   /** The schema `spark.read.parquet` infers for what writing `df` with
     * `partitionCols` leaves on disk: every field nullable (Spark's read
@@ -160,29 +175,27 @@ private[graft] object SegmentStore {
       sub -> org.json4s.jackson.JsonMethods.parse(st.json)
     }.toList)
 
-  /** The schema a commit doc records for payload `sub`, if any. */
-  def recordedSchema(doc: JValue, sub: String): Option[StructType] =
+  /** The schema the commit doc of `dir` records for payload `sub`; a
+    * doc without one is an older layout and is refused.
+    */
+  def recordedSchema(doc: JValue, dir: String, sub: String): StructType =
     (doc \ "schema" \ sub) match {
       case o: org.json4s.JObject =>
-        Some(org.apache.spark.sql.types.DataType.fromJson(
+        org.apache.spark.sql.types.DataType.fromJson(
           org.json4s.jackson.JsonMethods.compact(
             org.json4s.jackson.JsonMethods.render(o)))
-          .asInstanceOf[StructType])
-      case _ => None
+          .asInstanceOf[StructType]
+      case _ => throw olderLayout(dir, s"no recorded schema for '$sub'")
     }
 
   /** Read payload `sub` of a committed segment or tombstone batch `dir`
-    * with the schema its commit doc records — no inference job — or
-    * through inference when the doc records none (older layouts).
+    * with the schema its commit doc records — no inference job.
     */
-  def readPayload(spark: SparkSession, dir: String, sub: String): DataFrame =
-    readWithSchema(spark, s"$dir/$sub",
-      readDocDir(fsOf(spark, dir), s"$dir/stats")
-        .flatMap(recordedSchema(_, sub)))
-
-  def readWithSchema(spark: SparkSession, path: String,
-                     schema: Option[StructType]): DataFrame =
-    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  def readPayload(spark: SparkSession, dir: String, sub: String): DataFrame = {
+    val stats = s"$dir/stats"
+    spark.read.schema(recordedSchema(readDocDir(fsOf(spark, dir), stats),
+      stats, sub)).parquet(s"$dir/$sub")
+  }
 
   /** Numeric field of a doc (JSON numbers parse as int or double). */
   def docDouble(doc: org.json4s.JValue, field: String): Double =
@@ -198,24 +211,19 @@ private[graft] object SegmentStore {
     * row means "id is dead IN that segment". Bounded between
     * compactions — always broadcast, never shuffled against payloads.
     * The scope and the ids schema ride the stats doc (one driver-side
-    * read); legacy batches fall back to their `segs` parquet.
+    * read).
     */
   def tombstonePairs(spark: SparkSession, dels: Seq[String]): DataFrame =
     dels.map { d =>
-      val doc = readDocDir(fsOf(spark, d), s"$d/stats")
-      val scopeDf = doc
-        .flatMap { doc =>
-          (doc \ "scope") match {
-            case org.json4s.JArray(xs) =>
-              Some(spark.createDataFrame(xs.collect {
-                  case org.json4s.JString(s) => Tuple1(s)
-                }).toDF("_seg"))
-            case _ => None
-          }
-        }
-        .getOrElse(spark.read.parquet(s"$d/segs"))
-      readWithSchema(spark, s"$d/ids", doc.flatMap(recordedSchema(_, "ids")))
-        .crossJoin(scopeDf)
+      val stats = s"$d/stats"
+      val doc = readDocDir(fsOf(spark, d), stats)
+      val scope = (doc \ "scope") match {
+        case org.json4s.JArray(xs) =>
+          xs.collect { case org.json4s.JString(s) => Tuple1(s) }
+        case _ => throw olderLayout(stats, "no recorded scope")
+      }
+      spark.read.schema(recordedSchema(doc, stats, "ids")).parquet(s"$d/ids")
+        .crossJoin(spark.createDataFrame(scope).toDF("_seg"))
     }.reduce(_ unionByName _)
 
   /** Commit one tombstone batch: the ids parquet first, then the stats

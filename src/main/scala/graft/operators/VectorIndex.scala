@@ -100,57 +100,33 @@ object VectorIndex {
             cellsToJson(cb.toSeq.map(_.toSeq))).toList)))
 
   /** The PQ codebooks, when the index was built with `pqM > 0` —
-    * driver-side, m × ksub × dsub doubles (the whole model). Legacy
-    * parquet model dirs read through the Spark fallback.
+    * driver-side, m × ksub × dsub doubles (the whole model).
     */
   private[operators] def readPqModel(spark: SparkSession,
                                      indexPath: String): Option[Quantization.PqModel] = {
     val fs = fsOf(spark, indexPath)
     if (!fs.exists(new org.apache.hadoop.fs.Path(
         s"${pqPath(indexPath)}/_SUCCESS"))) None
-    else SegmentStore.readDocDir(fs, pqPath(indexPath)) match {
-      case Some(doc) =>
-        (doc \ "codebooks") match {
-          case org.json4s.JArray(cbs) =>
-            Some(Quantization.PqModel(cbs.map(cellsFromJson).toArray))
-          case other => sys.error(s"malformed pq doc: $other")
-        }
-      case None =>
-        val rows = SegmentStore.labeled(spark, "vec: legacy pq read")(
-          spark.read.parquet(pqPath(indexPath))
-            .orderBy("subspace", "cell").collect())
-        val m = rows.map(_.getInt(0)).max + 1
-        val ksub = rows.map(_.getInt(1)).max + 1
-        val cb = Array.ofDim[Array[Double]](m, ksub)
-        rows.foreach(r => cb(r.getInt(0))(r.getInt(1)) =
-          r.getSeq[Double](2).toArray)
-        Some(Quantization.PqModel(cb.map(_.toArray)))
+    else (SegmentStore.readDocDir(fs, pqPath(indexPath)) \ "codebooks") match {
+      case org.json4s.JArray(cbs) =>
+        Some(Quantization.PqModel(cbs.map(cellsFromJson).toArray))
+      case other => sys.error(s"malformed pq doc: $other")
     }
   }
 
   /** The frozen quantizer, driver-side: nlist×dim doubles (the whole
     * IVF model — tiny by design; what must scale is assignment and
-    * search, and those run as broadcast literal expressions). Legacy
-    * parquet quantizer dirs read through the Spark fallback.
+    * search, and those run as broadcast literal expressions).
     */
   private[operators] def readCentroids(spark: SparkSession,
-                                       indexPath: String): Array[Array[Double]] =
-    readCentroidsAt(spark, quantizerPath(indexPath),
-      s"$indexPath has no quantizer — build() first")
-
-  private def readCentroidsAt(spark: SparkSession, path: String,
-                              missingMsg: String): Array[Array[Double]] =
-    SegmentStore.readDocDir(fsOf(spark, path), path) match {
-      case Some(doc) =>
-        val cells = cellsFromJson(doc \ "cells")
-        require(cells.nonEmpty, missingMsg)
-        cells
-      case None =>
-        val rows = SegmentStore.labeled(spark, "vec: legacy centroids read")(
-          spark.read.parquet(path).orderBy("cell").collect())
-        require(rows.nonEmpty, missingMsg)
-        rows.map(_.getSeq[Double](1).toArray)
-    }
+                                       indexPath: String): Array[Array[Double]] = {
+    val missing = s"$indexPath has no quantizer — build() first"
+    val path = quantizerPath(indexPath)
+    val cells = cellsFromJson(
+      SegmentStore.readDocDir(fsOf(spark, path), path, missing) \ "cells")
+    require(cells.nonEmpty, missing)
+    cells
+  }
 
   /** Write one immutable segment: vectors (partitioned by cell) and
     * the ids ledger first, stats LAST (the commit marker).
@@ -256,33 +232,20 @@ object VectorIndex {
       "ids" -> SegmentStore.writtenSchema(ids)) ++
       codes.map(c => "codes" -> SegmentStore.writtenSchema(c, Seq("cell")))
 
-  /** One committed segment's (n, nlist), read DRIVER-SIDE — the stats
-    * sidecar is a JSON doc since r17-opt; legacy parquet stats dirs
-    * read through the Spark fallback.
+  /** One committed segment's (n, nlist), read DRIVER-SIDE from its
+    * stats doc.
     */
   private def readVecStats(spark: SparkSession,
-                           seg: String): (Double, Int) =
-    SegmentStore.readDocDir(fsOf(spark, seg), s"$seg/stats") match {
-      case Some(doc) =>
-        (SegmentStore.docDouble(doc, "n"),
-          SegmentStore.docDouble(doc, "nlist").toInt)
-      case None =>
-        val r = SegmentStore.labeled(spark, "vec: legacy stats read")(
-          spark.read.parquet(s"$seg/stats").collect().head)
-        (r.getAs[Double]("n"), r.getAs[Int]("nlist"))
-    }
+                           seg: String): (Double, Int) = {
+    val doc = SegmentStore.readDocDir(fsOf(spark, seg), s"$seg/stats")
+    (SegmentStore.docDouble(doc, "n"),
+      SegmentStore.docDouble(doc, "nlist").toInt)
+  }
 
-  /** A committed tombstone batch's charged n — driver-side doc read
-    * with the legacy parquet fallback.
-    */
+  /** A committed tombstone batch's charged n — driver-side doc read. */
   private def readDelN(spark: SparkSession, del: String): Double =
-    SegmentStore.readDocDir(fsOf(spark, del), s"$del/stats") match {
-      case Some(doc) => SegmentStore.docDouble(doc, "n")
-      case None =>
-        SegmentStore.labeled(spark, "vec: legacy tomb stats read")(
-          spark.read.parquet(s"$del/stats").collect().head)
-          .getAs[Double]("n")
-    }
+    SegmentStore.docDouble(
+      SegmentStore.readDocDir(fsOf(spark, del), s"$del/stats"), "n")
 
   // ---- lifecycle ---------------------------------------------------
 
@@ -321,8 +284,8 @@ object VectorIndex {
                              centroids: Array[Array[Double]]): Unit =
     writeQuantizerAt(spark, quantizerPath(indexPath), centroids)
 
-  private def writeQuantizerAt(spark: SparkSession, path: String,
-                               centroids: Array[Array[Double]]): Unit =
+  private[operators] def writeQuantizerAt(spark: SparkSession, path: String,
+                                          centroids: Array[Array[Double]]): Unit =
     SegmentStore.writeDocDir(fsOf(spark, path), path,
       org.json4s.JObject(
         "cells" -> cellsToJson(centroids.toSeq.map(_.toSeq))))

@@ -854,11 +854,10 @@ class DedupSpec extends AnyFunSuite {
       r
     }
     // the staged signature frames unpersist via QueryExecutionListener
-    // (async on the listener bus); only the 3 persisted RESULT frames
-    // (caller-owned) may remain
-    val deadline = System.currentTimeMillis + 20000
-    def n = spark.sparkContext.getPersistentRDDs.size
-    while (n > before + 3 && System.currentTimeMillis < deadline) Thread.sleep(100)
+    // (async on the listener bus, drained here); only the 3 persisted
+    // RESULT frames (caller-owned) may remain
+    org.apache.spark.TestJobs.drainListenerBus(spark)
+    val n = spark.sparkContext.getPersistentRDDs.size
     assert(n <= before + 3, s"cached RDDs grew: before=$before now=$n")
     results.foreach(_.unpersist(true))
   }

@@ -950,47 +950,28 @@ class InvertedIndexSpec extends AnyFunSuite {
     assert(idsAA(3) == Set(4L))
   }
 
-  test("appending into a pre-positions index mixes stats schemas " +
-      "without breaking reads (backward compat)") {
+  test("a segment whose stats are a parquet table (an older layout) is " +
+      "refused by search and by append, naming the dir") {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
     val path = tmp("graft-idx-oldstats")
     InvertedIndex.build(docs.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", path)
-    // fabricate a pre-round-9 LEGACY segment: a parquet stats table
-    // (the pre-r17-opt layout) with no `positions` column (3-column
-    // schema) — the reader must fall back from the JSON sidecar
+    // fabricate a segment in the layout older builds wrote: a one-row
+    // parquet stats table with its committer's _SUCCESS, no doc.json
     val seg = segDirs(path).head.toString
-    val doc = org.json4s.jackson.JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$seg/stats/doc.json")),
-      java.nio.charset.StandardCharsets.UTF_8))
-    def d(f: String): Double = (doc \ f) match {
-      case org.json4s.JDouble(v) => v
-      case org.json4s.JInt(v) => v.toDouble
-      case other => fail(s"stats doc field $f not numeric: $other")
-    }
-    Seq((d("n"), d("sum_len"), d("buckets").toInt))
-      .toDF("n", "sum_len", "buckets")
+    Seq((1.0, 1.0, 8)).toDF("n", "sum_len", "buckets")
       .write.mode("overwrite").parquet(s"$seg/stats")
-    // an append with CURRENT code writes 4-column stats — the index
-    // now legitimately holds both generations
-    InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1),
-      "doc_id", "text", path)
-    val terms = Seq("spark", "hash")
-    val mixed = topDocs(InvertedIndex.searchTopK(spark, path, terms,
+    def refused(body: => Any): Unit = {
+      val msg = intercept[IllegalStateException](body).getMessage
+      assert(msg.contains(s"$seg/stats") &&
+        msg.contains("older graft layout") && msg.contains("build()"), msg)
+    }
+    refused(InvertedIndex.searchTopK(spark, path, Seq("spark", "hash"),
       k = 15, idColName = "doc_id"))
-    val pathOne = tmp("graft-idx-oldstats-one")
-    InvertedIndex.build(docs, "doc_id", "text", pathOne)
-    assert(mixed == topDocs(InvertedIndex.searchTopK(spark, pathOne,
-      terms, k = 15, idColName = "doc_id")))
-    // stats()/termStats() walk the same union; phrase refuses cleanly
-    // (the missing column reads as positions = false, as documented)
-    assert(InvertedIndex.stats(spark, path).collect().nonEmpty)
-    assert(InvertedIndex.termStats(spark, path, terms)
-      .collect().nonEmpty)
-    assert(intercept[IllegalArgumentException] {
-      InvertedIndex.phraseSearch(spark, path, Seq("spark", "hash"))
-    }.getMessage.contains("without positional postings"))
+    refused(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1),
+      "doc_id", "text", path))
+    // the refused append wrote no segment
+    assert(segDirs(path).size == 1)
   }
 
   test("query-term lowercasing is locale-independent (Turkish-I safe)") {

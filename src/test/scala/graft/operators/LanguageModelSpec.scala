@@ -151,6 +151,28 @@ class LanguageModelSpec extends AnyFunSuite {
     assert(perGroup("null") === Map("middle" -> 1, "tail" -> 1))
   }
 
+  test("perplexityBuckets releases its staged scores after the first " +
+      "action") {
+    val docs = (1L to 8L).map { i =>
+      (i, if (i % 2 == 0) "web" else "books",
+        if (i <= 4) "the cat sat on the mat" else s"zz$i qq$i the cat")
+    }.toDF("doc_id", "source", "text")
+    def scoresCached = LanguageModel.bigramScore(docs, docs, "doc_id",
+      "text").storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = LanguageModel.perplexityBuckets(docs, docs, "doc_id", "text",
+      "source")
+    assert(scoresCached)
+    assert(out.collect().length === 8)
+    // the release runs in a query-execution listener on the bus
+    org.apache.spark.TestJobs.drainListenerBus(spark)
+    assert(!scoresCached)
+    // what stays is the ordinal table Sampling.ordinalByKey returns
+    // persisted, so that a second action reuses the ordinals it assigned
+    assert((sc.getPersistentRDDs.keySet -- before).size <= 1)
+  }
+
   test("broadcastUnigrams=false scores bit-identically to the default") {
     val train = Seq((1L, "a b a c"), (2L, "a b"), (3L, "c d e"))
       .toDF("doc_id", "text")

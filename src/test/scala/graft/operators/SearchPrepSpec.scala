@@ -9,8 +9,8 @@ import graft.{Tables, TestSpark}
 /** Search preparation on live stores: a search call builds its frame
   * without running a Spark job (the batch and vector searches collect
   * their bounded query side once), leaves nothing persisted, and opens
-  * every payload dir with the schema its commit doc records — or
-  * through inference on layouts that record none. One fixture over the
+  * every payload dir with the schema its commit doc records; a store
+  * in an older layout, which records none, is refused. One fixture over the
   * sf0.001 documents and embeddings: each store holds two segments
   * (even ids built, odd ids appended) and one tombstone batch.
   */
@@ -98,9 +98,6 @@ class SearchPrepSpec extends AnyFunSuite {
     ("hybrid_stored", 2, () => Serving.searchHybrid(storedQueries, s.inv,
       s.vec, 5, perLegK = 10)))
 
-  private def rows(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).toSeq.sorted
-
   test("a search call runs no Spark job before the caller's action") {
     val s = stores
     queries // its jobs land outside the measured calls
@@ -129,13 +126,13 @@ class SearchPrepSpec extends AnyFunSuite {
   }
 
   private def recorded(dir: String, doc: String, sub: String) =
-    SegmentStore.readDocDir(SegmentStore.fsOf(spark, dir), s"$dir/$doc")
-      .flatMap(SegmentStore.recordedSchema(_, sub))
+    SegmentStore.recordedSchema(SegmentStore.readDocDir(
+      SegmentStore.fsOf(spark, dir), s"$dir/$doc"), s"$dir/$doc", sub)
 
   private def assertExact(dir: String, subs: String*): Unit =
     subs.foreach { sub =>
       val inferred = spark.read.parquet(s"$dir/$sub").schema
-      assert(recorded(dir, "stats", sub).contains(inferred),
+      assert(recorded(dir, "stats", sub) == inferred,
         s"$dir/$sub: recorded ${recorded(dir, "stats", sub)}, " +
           s"inferred $inferred")
     }
@@ -147,8 +144,8 @@ class SearchPrepSpec extends AnyFunSuite {
     SegmentStore.committedSegments(spark, s.inv)
       .foreach(assertExact(_, "postings", "lens"))
     SegmentStore.committedDeletes(spark, s.inv).foreach(assertExact(_, "ids"))
-    assert(recorded(s.inv, "vocab_segments", "vocab")
-      .contains(spark.read.parquet(s"${s.inv}/vocab").schema))
+    assert(recorded(s.inv, "vocab_segments", "vocab") ==
+      spark.read.parquet(s"${s.inv}/vocab").schema)
     // vectors and their ids ledger
     SegmentStore.committedSegments(spark, s.vec)
       .foreach(assertExact(_, "vectors", "ids"))
@@ -184,18 +181,16 @@ class SearchPrepSpec extends AnyFunSuite {
       .filter(d => d.getName == "stats" &&
         new java.io.File(d, "doc.json").exists)
       .map { d =>
-        val doc = SegmentStore.readDocDir(fs, d.toString).get
+        val doc = SegmentStore.readDocDir(fs, d.toString)
           .asInstanceOf[org.json4s.JObject]
         SegmentStore.writeDocDir(fs, d.toString,
           org.json4s.JObject(doc.obj.filterNot(_._1 == "schema")))
       }.size
   }
 
-  test("stores written without recorded schemas or doc sidecars return " +
-      "identical rows") {
+  test("stores in an older layout (no recorded schemas, parquet " +
+      "sidecars) are refused, naming the dir") {
     val s = stores
-    val kinds = searches(_: Stores).filterNot(_._1.endsWith("_stored"))
-    val expected = kinds(s).map { case (k, _, call) => k -> rows(call()) }
     val conf = spark.sparkContext.hadoopConfiguration
     def copyOf(root: String): String = {
       val to = tmp("graft-prep-old")
@@ -216,13 +211,21 @@ class SearchPrepSpec extends AnyFunSuite {
       .map(new org.apache.hadoop.fs.Path(_).getName).toDF("segment")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"${old.inv}/vocab_segments")
-    kinds(old).foreach { case (k, _, call) =>
-      assert(rows(call()) == expected.toMap.apply(k), s"$k diverged")
+    // (kind, the refused dir: a schema-less segment or tombstone doc,
+    // or the parquet sidecar itself)
+    def q(root: String) = java.util.regex.Pattern.quote(root)
+    def docDir(root: String) = s"${q(root)}/(segments|deletes)/[^/ ]+/stats"
+    val refusals = Seq("bm25" -> docDir(old.inv), "knn" -> docDir(old.vec),
+        "bool_prefix" -> q(s"${old.inv}/vocab_segments")) ++
+      Seq("fielded_best", "fielded_most", "fielded_phrase")
+        .map(_ -> q(s"${old.fld}/_fields_meta"))
+    val calls = searches(old).map(c => c._1 -> c._3).toMap
+    refusals.foreach { case (kind, dir) =>
+      val msg = intercept[IllegalStateException](calls(kind)().collect())
+        .getMessage
+      assert(dir.r.findFirstIn(msg).nonEmpty &&
+        msg.contains("older graft layout"), s"$kind: $msg")
     }
-    // the old layout really reads through inference
-    val (_, jobs) = jobsDuring(spark)(
-      InvertedIndex.searchTopK(spark, old.inv, Seq("stream"), 10))
-    assert(jobs > 0)
   }
 }
 

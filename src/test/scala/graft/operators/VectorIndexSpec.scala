@@ -449,6 +449,24 @@ class VectorIndexSpec extends AnyFunSuite {
       new java.io.File(d, "stats/_SUCCESS").exists) == 1)
   }
 
+  test("a root whose quantizer is gone refuses with the build() message") {
+    val path = tmp("graft-vidx-noq")
+    VectorIndex.build(emb.filter(col("vec_id") < 40), "vec_id", "embedding",
+      path, nlist = 2)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$path/quantizer"))
+    assert(segDirs(path).nonEmpty)
+    val search = intercept[IllegalArgumentException] {
+      VectorIndex.searchTopK(queriesShifted(1), path, 3)
+    }
+    assert(search.getMessage.contains(s"$path has no quantizer — build() first"))
+    val append = intercept[IllegalArgumentException] {
+      VectorIndex.append(emb.filter(col("vec_id") === 40), "vec_id",
+        "embedding", path)
+    }
+    assert(append.getMessage.contains("has no quantizer — build() first"))
+  }
+
   test("stats exposes per-cell occupancy; a drifted corpus moves " +
     "cell_skew up") {
     val path = tmp("graft-vidx-drift")
@@ -521,9 +539,8 @@ class VectorIndexSpec extends AnyFunSuite {
     val fs = new Path(p1).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val centsBefore = VectorIndex.readCentroids(spark, p1).toSeq.map(_.toSeq)
-    spark.createDataFrame(Seq((0, Seq(9.0, 9.0)), (1, Seq(-9.0, -9.0))))
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$p1/quantizer-next")
+    VectorIndex.writeQuantizerAt(spark, s"$p1/quantizer-next",
+      Array(Array(9.0, 9.0), Array(-9.0, -9.0)))
     Manifest.write(fs, new Path(s"$p1/rebuilding"),
       Seq("segments/seg-never-written",
         "segments/" + new Path(segDirs(p1).head.toString).getName))
@@ -544,10 +561,9 @@ class VectorIndexSpec extends AnyFunSuite {
       "vec_id", "embedding", p2)
     val Seq(a, b) = segDirs(p2).map(f => new Path(f.toString).getName)
       .sorted.toSeq
-    val staged = Seq((0, (0 until 64).map(_ => 1.0)),
-      (1, (0 until 64).map(_ => -1.0)))
-    spark.createDataFrame(staged).toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$p2/quantizer-next")
+    val staged = Seq(Seq.fill(64)(1.0), Seq.fill(64)(-1.0))
+    VectorIndex.writeQuantizerAt(spark, s"$p2/quantizer-next",
+      staged.map(_.toArray).toArray)
     Manifest.write(fs, new Path(s"$p2/rebuilding"),
       Seq(s"segments/$b", s"segments/$a"))
     VectorIndex.heal(spark, p2)
@@ -556,7 +572,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(segDirs(p2).map(f => new Path(f.toString).getName) == Seq(b),
       "completion must retire the input segments")
     assert(VectorIndex.readCentroids(spark, p2).toSeq.map(_.toSeq)
-      == staged.map(_._2), "completion must promote the staged quantizer")
+      == staged, "completion must promote the staged quantizer")
     // earliest window: rebuild() writes the manifest BEFORE staging
     // quantizer-next (so no orphan staging dir can ever outlive a
     // crash) — a manifest alone must roll back to the old quantizer
