@@ -290,30 +290,18 @@ object FieldedIndex {
     require(fieldBoosts.map(_._1).distinct.size == fieldBoosts.size,
       s"duplicate fields in $fieldBoosts")
     val phraseTerms = graft.functions.TextAnalysis.tokensOf(query)
-    // per-field segment/tombstone listings and the per-field corpus
-    // moments (InvertedIndex.liveStatsBatch) are driver-side reads —
-    // building the frame runs no job, however wide the index
-    val meta = fieldBoosts.map { case (f, _) =>
-      val dir = fieldDir(root, f)
-      val segs = InvertedIndex.committedSegments(spark, dir)
-      require(segs.nonEmpty,
-        s"$dir has no committed segments — build() first")
-      (f, segs, InvertedIndex.committedDeletes(spark, dir))
-    }
-    val statsByField = InvertedIndex.liveStatsBatch(spark, meta)
-    val preByField = meta.map { case (f, segs, dels) =>
-      f -> (segs, dels, statsByField(f))
-    }.toMap
+    // each field's subtree is opened once (its snapshot and corpus
+    // moments are driver-side doc reads) — building the frame runs no
+    // job, however wide the index
     val perField = fieldBoosts.map { case (f, boost) =>
+      val live = InvertedIndex.openLive(spark, fieldDir(root, f))
       (if (mode == "phrase" && phraseTerms.nonEmpty)
          // order/repeats preserved (a phrase is a term ARRAY, not a
          // bag); each field's leg is the raw phrase-BM25 of idx8
-         InvertedIndex.rawPhraseScores(spark, fieldDir(root, f),
-           phraseTerms, k1, b, Some(preByField(f)))
+         InvertedIndex.rawPhraseScores(spark, live, phraseTerms, k1, b)
        // an empty-analysis query falls through to the typed empty
        // frame rawFieldScores builds (ES's empty hits), any mode
-       else rawFieldScores(spark, fieldDir(root, f), query,
-         operator == "and", k1, b, Some(preByField(f))))
+       else rawFieldScores(spark, live, query, operator == "and", k1, b))
         .select(col("id"), (col("_fs") * boost).as("_s"))
     }
     val combined = perField.reduce(_ unionByName _)
@@ -344,8 +332,8 @@ object FieldedIndex {
     * leg present — and mustNot never scores. Score = Σ over present
     * positive clauses of each clause's BEST leg, single 6-dp round.
     *
-    * Plan shape: driver-side stats for every touched field
-    * ([[InvertedIndex.liveStatsBatch]]), one bucket-pruned postings
+    * Plan shape: driver-side stats for every touched field (one
+    * [[InvertedIndex.openLive]] each), one bucket-pruned postings
     * read per touched field covering only that field's terms, a
     * broadcast clause-leg table, then two bounded aggregations
     * (per-(doc, clause) dis_max; per-doc gate + sum). The corpus is
@@ -386,19 +374,13 @@ object FieldedIndex {
         " or scope every clause (field:term)")
     val touched = (clauses.collect { case (_, (Some(f), _)) => f } ++
       (if (anyUnscoped) dfb.map(_._1) else Nil)).distinct
-    val meta = touched.map { f =>
-      val dir = fieldDir(root, f)
-      val segs = InvertedIndex.committedSegments(spark, dir)
-      require(segs.nonEmpty,
-        s"$dir has no committed segments — build() first")
-      (f, segs, InvertedIndex.committedDeletes(spark, dir))
-    }
-    val statsByField = InvertedIndex.liveStatsBatch(spark, meta)
+    val liveByField = touched.map(f =>
+      f -> InvertedIndex.openLive(spark, fieldDir(root, f))).toMap
     val boostOf = dfb.toMap
     // clause → legs, analyzed + deduped per role; a (field, term) leg
     // on both sides of the sign is unsatisfiable or dead — refuse
     def analyzed(t: String): String =
-      statsByField(touched.head).analyzeTerm(t)
+      liveByField(touched.head).analyzeTerm(t)
     val legRows: Seq[(Int, String, String, String, Double)] =
       clauses.zipWithIndex.flatMap { case ((role, (fOpt, t)), i) =>
         val at = analyzed(t)
@@ -418,10 +400,8 @@ object FieldedIndex {
     val legsDf = broadcast(legRows
       .toDF("_cid", "_role", "_field", "term", "_boost"))
     val contribs = touched.map { f =>
-      val (_, segs, dels) = meta.find(_._1 == f).get
       val terms = legRows.filter(_._3 == f).map(_._4).distinct
-      InvertedIndex.rawTermContribs(spark, segs, dels,
-          statsByField(f), terms, k1, b)
+      InvertedIndex.rawTermContribs(spark, liveByField(f), terms, k1, b)
         .withColumn("_field", lit(f))
     }.reduce(_ unionByName _)
     val perClause = contribs.join(legsDf, Seq("_field", "term"))
@@ -442,51 +422,27 @@ object FieldedIndex {
   }
 
   /** One field's per-doc RAW match score over its live postings:
-    * (id, _fs double) — [[InvertedIndex.searchTopK]]'s staged BM25
-    * expression tree minus the 6-dp rounding (which belongs to the
-    * FINAL combined score here, exactly like the scan path's single
-    * `round(_score, 6)`).
+    * (id, _fs double) — the per-doc sum of
+    * [[InvertedIndex.rawTermContribs]] without the 6-dp rounding (which
+    * belongs to the FINAL combined score here, exactly like the scan
+    * path's single `round(_score, 6)`).
     */
-  private def rawFieldScores(spark: SparkSession, dir: String,
-                             query: String, requireAll: Boolean,
-                             k1: Double, b: Double,
-                             pre: Option[(Seq[String], Seq[String],
-                               InvertedIndex.LiveStats)] = None)
-      : DataFrame = {
-    val segs = pre.map(_._1)
-      .getOrElse(InvertedIndex.committedSegments(spark, dir))
-    require(segs.nonEmpty,
-      s"$dir has no committed segments — build() first")
-    val dels = pre.map(_._2)
-      .getOrElse(InvertedIndex.committedDeletes(spark, dir))
-    val st = pre.map(_._3)
-      .getOrElse(InvertedIndex.liveStats(spark, segs, dels))
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+  private def rawFieldScores(spark: SparkSession,
+                             live: InvertedIndex.LiveIndex, query: String,
+                             requireAll: Boolean, k1: Double,
+                             b: Double): DataFrame = {
     val terms = graft.functions.TextAnalysis.tokensOf(query)
-      .map(st.analyzeTerm).distinct
-    if (terms.isEmpty) {
+      .map(live.analyzeTerm).distinct
+    if (terms.isEmpty)
       // a query that analyzes to zero terms matches nothing (ES's
-      // empty-match) — typed empty frame, id type from the postings
-      // footer
-      val idT = InvertedIndex.postingsOf(spark, segs.head).schema("id")
+      // empty-match) — typed empty frame, id type from the recorded
+      // postings schema
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(idT,
+        org.apache.spark.sql.types.StructType(Seq(live.idType,
           org.apache.spark.sql.types.StructField("_fs",
             org.apache.spark.sql.types.DoubleType))))
-    }
-    val p = InvertedIndex.prunedLivePostings(spark, segs, dels, terms,
-      st.buckets)
-    val dfreq = p.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("_df"))
-    val scored = p.join(broadcast(dfreq), Seq("term"))
-      .withColumn("_idf",
-        log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5)))
-      .withColumn("_s",
-        col("_idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
+    val scored = InvertedIndex.rawTermContribs(spark, live, terms, k1, b)
       .groupBy("id")
       .agg(sum(col("_s")).as("_fs"), count(lit(1)).as("_hits"))
     (if (requireAll) scored.filter(col("_hits") === terms.size.toLong)

@@ -75,19 +75,6 @@ object InvertedIndex {
   private def fsOf(spark: SparkSession, path: String) =
     SegmentStore.fsOf(spark, path)
 
-  /** Committed segment dirs (stats marker present), sorted. */
-  private[operators] def committedSegments(spark: SparkSession,
-                                indexPath: String): Seq[String] =
-    SegmentStore.committedSegments(spark, indexPath)
-
-  /** Committed tombstone batch dirs under `deletes/` — same stats-last
-    * commit marker as segments, so a crashed [[deleteDocs]] is
-    * invisible to every reader.
-    */
-  private[operators] def committedDeletes(spark: SparkSession,
-                               indexPath: String): Seq[String] =
-    SegmentStore.committedDeletes(spark, indexPath)
-
   /** Write one immutable segment: postings first, stats last (the
     * commit marker).
     */
@@ -228,80 +215,124 @@ object InvertedIndex {
         "analyzer" -> org.json4s.JString(analyzer),
         SegmentStore.schemaField(schemas)))
 
-  /** One committed segment's stats, read DRIVER-SIDE from its stats
-    * doc (no Spark job).
+  /** The index as one call sees it: its committed
+    * [[SegmentStore.Snapshot]], the tombstone-adjusted corpus moments
+    * (n, sum_len) and the layout the commit docs record. Built from the
+    * snapshot's docs on the driver — no Spark job — and shared by every
+    * reader of the call, so the accounting cannot desynchronize between
+    * them.
     */
-  private[operators] final case class SegStatsDoc(n: Double, sumLen: Double,
-                                                  buckets: Int,
-                                                  positions: Boolean,
-                                                  analyzer: String)
+  private[operators] final case class LiveIndex(snap: SegmentStore.Snapshot,
+                                                n: Double, sumLen: Double,
+                                                buckets: Int,
+                                                positions: Boolean,
+                                                analyzer: String) {
+    /** Query-term analysis matching the chain the postings were built
+      * with: lowercase always, plus the minimal stem under "english".
+      * Idempotent (every stemmer output is a fixed point), so terms
+      * that already went through resolution (fuzzy) re-analyze safely.
+      */
+    def analyzeTerm(t: String): String =
+      graft.functions.EnglishMinimalStem.analyzeTerm(analyzer,
+        t.toLowerCase(java.util.Locale.ROOT))
 
-  private def readSegStats(spark: SparkSession, seg: String): SegStatsDoc = {
-    val stats = s"$seg/stats"
-    val doc = SegmentStore.readDocDir(fsOf(spark, seg), stats)
-    (doc \ "positions", doc \ "analyzer") match {
-      case (org.json4s.JBool(positions), org.json4s.JString(analyzer)) =>
-        SegStatsDoc(SegmentStore.docDouble(doc, "n"),
-          SegmentStore.docDouble(doc, "sum_len"),
-          SegmentStore.docDouble(doc, "buckets").toInt,
-          positions, analyzer)
-      case _ => throw SegmentStore.olderLayout(stats,
-        "no recorded positions/analyzer")
+    /** The BM25 length norm's average doc length. */
+    def avgLen: Double = InvertedIndex.avgLen(n, sumLen)
+
+    /** The type of the postings' id column, from the recorded schema. */
+    def idType: org.apache.spark.sql.types.StructField =
+      snap.segs.head.schema("postings")("id")
+  }
+
+  /** Open the index at `indexPath` for one call (refusing a root with
+    * no committed segment).
+    */
+  private[operators] def openLive(spark: SparkSession,
+                                  indexPath: String): LiveIndex =
+    liveOf(SegmentStore.open(spark, indexPath))
+
+  /** Moments and layout of a non-empty snapshot. Every segment must
+    * record its positions and analyzer; they are uniform across
+    * segments because every writer inherits them from here.
+    */
+  private def liveOf(snap: SegmentStore.Snapshot): LiveIndex = {
+    val layouts = snap.segs.map { s =>
+      (s.doc \ "positions", s.doc \ "analyzer") match {
+        case (org.json4s.JBool(positions), org.json4s.JString(analyzer)) =>
+          (positions, analyzer)
+        case _ => throw SegmentStore.olderLayout(s"${s.path}/stats",
+          "no recorded positions/analyzer")
+      }
     }
+    LiveIndex(snap, snap.liveSum("n"), snap.liveSum("sum_len"),
+      snap.segs.head.num("buckets").toInt,
+      layouts.head._1, layouts.head._2)
   }
 
-  /** A committed tombstone batch's charged moments (n, sum_len) —
-    * driver-side doc read.
+  /** (buckets, positions, analyzer) a new segment of the snapshot's
+    * index is written with — the fresh-index defaults when it has no
+    * committed segment yet.
     */
-  private def readDelStats(spark: SparkSession,
-                           del: String): (Double, Double) = {
-    val doc = SegmentStore.readDocDir(fsOf(spark, del), s"$del/stats")
-    (SegmentStore.docDouble(doc, "n"), SegmentStore.docDouble(doc, "sum_len"))
+  private def layoutOr(snap: SegmentStore.Snapshot,
+                       bucketsIfNew: Int): (Int, Boolean, String) =
+    if (snap.segs.isEmpty) (bucketsIfNew, false, "standard")
+    else {
+      val l = liveOf(snap)
+      (l.buckets, l.positions, l.analyzer)
+    }
+
+  /** The average doc length BM25 normalizes by; 1.0 on an empty live
+    * corpus, where no posting survives to be scored.
+    */
+  private def avgLen(n: Double, sumLen: Double): Double =
+    if (n > 0) sumLen / n else 1.0
+
+  /** The Okapi BM25 idf of a term with live document frequency `df` in
+    * a corpus of `n` live docs.
+    */
+  private def bm25Idf(n: Double, df: Column): Column =
+    log(lit(1.0) + (lit(n) - df + 0.5) / (df + 0.5))
+
+  /** The Okapi BM25 term score: `idf` times the saturated,
+    * length-normalized term frequency `tf` of a doc of length `len`.
+    */
+  private def bm25(idf: Column, tf: Column, len: Column, avg: Double,
+                   k1: Double, b: Double): Column =
+    idf * tf * (k1 + 1.0) /
+      (tf + lit(k1) * (lit(1.0) - b + lit(b) * len / lit(avg)))
+
+  /** Live postings of the index under `prune` (see
+    * [[SegmentStore.liveRows]]).
+    */
+  private def livePostings(spark: SparkSession, live: LiveIndex,
+                           prune: DataFrame => DataFrame): DataFrame =
+    SegmentStore.liveRows(spark, live.snap, "postings", prune)
+
+  /** The per-segment prune of a prefix read: the candidates' bucket
+    * dirs, plus a pushable range bound for row-group pruning and the
+    * exact prefix test (startsWith alone doesn't push as a range); any
+    * real char's first UTF-16 unit sorts below the U+FFFF
+    * noncharacter, so the upper bound never excludes a true extension.
+    */
+  private def prefixPrune(live: LiveIndex, p: String,
+                          cand: Seq[String]): DataFrame => DataFrame = {
+    val wanted = cand.map(bucketOf(_, live.buckets)).distinct
+    _.filter(col("bucket").isin(wanted: _*))
+      .filter(col("term") >= p && col("term") < p + '\uffff')
+      .filter(col("term").startsWith(p))
   }
 
-  /** (buckets, positions, analyzer) of an existing index — one
-    * driver-side stats-doc read of the first committed segment.
+  /** A typed empty (id, score) result: the id type from the recorded
+    * postings schema.
     */
-  private def segMeta(spark: SparkSession,
-                      segs: Seq[String]): (Int, Boolean, String) = {
-    val st = readSegStats(spark, segs.head)
-    (st.buckets, st.positions, st.analyzer)
-  }
-
-  /** Whether the index stores positional postings — from the first
-    * committed segment's stats (uniform across segments because every
-    * writer derives it from here).
-    */
-  private def indexPositions(spark: SparkSession,
-                             segs: Seq[String]): Boolean =
-    segs.nonEmpty && readSegStats(spark, segs.head).positions
-
-  /** One segment's postings, opened with the schema its commit doc
-    * records (no inference job).
-    */
-  private[operators] def postingsOf(spark: SparkSession,
-                                    seg: String): DataFrame =
-    SegmentStore.readPayload(spark, seg, "postings")
-
-  private def mergedPostings(spark: SparkSession, segs: Seq[String],
-                             prune: DataFrame => DataFrame): DataFrame =
-    segs.map(s => prune(postingsOf(spark, s)))
-      .reduce(_ unionByName _)
-
-  /** [[mergedPostings]] with each segment's rows tagged by segment
-    * name (a literal — free), minus the tombstone pairs applicable to
-    * that segment. The tag exists so a tombstone kills an id only in
-    * its own scope: a re-ingested id's newer posting survives.
-    */
-  private def mergedLivePostings(spark: SparkSession, segs: Seq[String],
-                                 dels: Seq[String],
-                                 prune: DataFrame => DataFrame): DataFrame =
-    segs.map(s => prune(postingsOf(spark, s))
-        .withColumn("_seg", lit(new org.apache.hadoop.fs.Path(s).getName)))
-      .reduce(_ unionByName _)
-      .join(broadcast(tombstonePairs(spark, dels)),
-        Seq("id", "_seg"), "left_anti")
-      .drop("_seg")
+  private def emptyScores(spark: SparkSession, live: LiveIndex,
+                          idColName: String,
+                          scoreNullable: Boolean = true): DataFrame =
+    spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(live.idType.copy(name = idColName),
+        org.apache.spark.sql.types.StructField("score",
+          org.apache.spark.sql.types.DoubleType, scoreNullable))))
 
 
   /** Create a FRESH index at `indexPath` (any existing segments are
@@ -356,21 +387,14 @@ object InvertedIndex {
     * postings) charges the batch; searches then pay one anti-join
     * against the (bounded-between-compactions) tombstone set.
     */
-  def deleteDocs(ids: DataFrame, indexPath: String): Unit = {
-    val spark = ids.sparkSession
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    deleteDocsScoped(ids, indexPath, segs)
-  }
+  def deleteDocs(ids: DataFrame, indexPath: String): Unit =
+    deleteDocsScoped(ids, SegmentStore.open(ids.sparkSession, indexPath))
 
-  /** [[deleteDocs]] against an explicit scope — the segments the
-    * tombstone applies to. [[ingestUpsertBatch]] passes a scope that
-    * EXCLUDES the batch's own (crashed, about-to-be-rewritten)
-    * segment; everything else uses the full committed set.
+  /** [[deleteDocs]] against the snapshot a call opened: its segments
+    * are the tombstone's scope.
     */
-  private def deleteDocsScoped(ids: DataFrame, indexPath: String,
-                               segs: Seq[String]): Unit = {
+  private def deleteDocsScoped(ids: DataFrame,
+                               snap: SegmentStore.Snapshot): Unit = {
     require(ids.columns.length == 1,
       s"ids must be a single-column frame, got ${ids.columns.toSeq}")
     val spark = ids.sparkSession
@@ -389,8 +413,7 @@ object InvertedIndex {
     // compensate for an unknown id (ids < requested) and slip through.
     // Per-frame semi-join (the tombstoneLiveOf shape): a compacted
     // segment's id-bucketed lens charges the delete without a shuffle.
-    val hitRow = liveLensFrames(spark, segs,
-        committedDeletes(spark, indexPath))
+    val hitRow = liveLensFrames(spark, snap)
       .map(_.join(del, Seq("id"), "left_semi"))
       .reduce(_ unionByName _)
       .agg(count(lit(1)).cast("double").as("n"),
@@ -400,34 +423,24 @@ object InvertedIndex {
         hitRow.getDouble(1).toLong == nReq,
       s"deleteDocs: $nReq ids requested but ${hitRow.getDouble(0).toLong} " +
         s"live rows over ${hitRow.getDouble(1).toLong} distinct ids " +
-        s"matched in $indexPath — unknown/already-tombstoned ids (or an " +
-        "id live in two segments) are contract violations")
-    writeTombstone(spark, indexPath, segs, del,
-      hitRow.getDouble(0), hitRow.getDouble(2))
+        s"matched in ${snap.root} — unknown/already-tombstoned ids (or " +
+        "an id live in two segments) are contract violations")
+    writeTombstone(spark, snap, del, hitRow.getDouble(0), hitRow.getDouble(2))
   }
 
   /** Commit one tombstone batch: ids, then scope, then stats LAST (the
-    * marker). The SCOPE is the segments committed at the caller's
-    * probe time (the only ones that can hold the ids) and never a
-    * later segment — so a deleted id can be re-ingested (see
+    * marker). The SCOPE is the snapshot's segments, committed at the
+    * caller's probe time (the only ones that can hold the ids) and
+    * never a later segment — so a deleted id can be re-ingested (see
     * [[upsertDocs]]) and the new posting is not masked. Segment-name
     * reuse cannot dangle a scope: only ingestBatch writes predictable
     * names, and its ledger (cleared solely by build(), which also
     * clears tombstones) blocks any second ingest of a batch id.
     */
-  private def writeTombstone(spark: SparkSession, indexPath: String,
-                             segs: Seq[String], ids: DataFrame,
-                             n: Double, sumLen: Double): Unit =
-    SegmentStore.writeTombstone(spark, indexPath, segs, ids,
+  private def writeTombstone(spark: SparkSession, scope: SegmentStore.Snapshot,
+                             ids: DataFrame, n: Double, sumLen: Double): Unit =
+    SegmentStore.writeTombstone(spark, scope, ids,
       Seq("n" -> n, "sum_len" -> sumLen))
-
-  /** (id, _seg) applicability pairs of the committed tombstones: a
-    * row means "id is dead IN that segment". Bounded between
-    * compactions — always broadcast, never shuffled against postings.
-    */
-  private def tombstonePairs(spark: SparkSession,
-                             dels: Seq[String]): DataFrame =
-    SegmentStore.tombstonePairs(spark, dels)
 
   /** Per-segment `lens` rows tagged with their segment name, minus the
     * tombstones applicable to each segment: exactly the live corpus —
@@ -439,17 +452,9 @@ object InvertedIndex {
     * per frame and union the RESULTS; semi-joins distribute over the
     * left union, so that rewrite is always sound.
     */
-  private def liveLensFrames(spark: SparkSession, segs: Seq[String],
-                             dels: Seq[String]): Seq[DataFrame] =
-    SegmentStore.liveLedgerFrames(spark, segs, dels, "lens")
-
-  /** The union view of [[liveLensFrames]] — for consumers that rewrite
-    * the whole corpus anyway (compaction) and do not care about
-    * per-frame partitioning.
-    */
-  private def liveLens(spark: SparkSession, segs: Seq[String],
-                       dels: Seq[String]): DataFrame =
-    liveLensFrames(spark, segs, dels).reduce(_ unionByName _)
+  private def liveLensFrames(spark: SparkSession,
+                             snap: SegmentStore.Snapshot): Seq[DataFrame] =
+    SegmentStore.liveLedgerFrames(spark, snap, "lens")
 
   /** ES-style upsert: documents whose ids are LIVE are tombstoned
     * first (scoped to the current segments), then the whole batch
@@ -460,12 +465,9 @@ object InvertedIndex {
     */
   def upsertDocs(docs: DataFrame, idCol: String, textCol: String,
                  indexPath: String): Unit = {
-    val spark = docs.sparkSession
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    tombstoneLiveOf(docs, idCol, indexPath, segs)
-    append(docs, idCol, textCol, indexPath)
+    val snap = SegmentStore.open(docs.sparkSession, indexPath)
+    tombstoneLiveOf(docs, idCol, snap)
+    appendTo(docs, idCol, textCol, snap)
   }
 
   /** The upsert paths' single-scan probe-and-tombstone: ONE lens read
@@ -474,8 +476,7 @@ object InvertedIndex {
     * deleteDocsScoped. No live match → no tombstone (pure inserts).
     */
   private def tombstoneLiveOf(docs: DataFrame, idCol: String,
-                              indexPath: String,
-                              segs: Seq[String]): Unit = {
+                              scope: SegmentStore.Snapshot): Unit = {
     val spark = docs.sparkSession
     SegmentStore.labeled(spark, "idx tomb: live probe") {
       // pinned: the ids subtree feeds one semi-join PER lens frame below
@@ -485,16 +486,15 @@ object InvertedIndex {
       // keeps a compacted segment's id-bucketed lens pre-partitioned
       // into its probe — the O(index) lens read of every upsert/CDC
       // batch never reshuffles (spec-pinned)
-      val hits = liveLensFrames(spark, segs,
-          committedDeletes(spark, indexPath))
+      val hits = liveLensFrames(spark, scope)
         .map(_.join(ids, Seq("id"), "left_semi"))
         .reduce(_ unionByName _)
         .localCheckpoint(true)
       val m = hits.agg(count(lit(1)).cast("double").as("n"),
         coalesce(sum(col("len")), lit(0.0)).as("sum_len")).head()
       if (m.getDouble(0) > 0)
-        writeTombstone(spark, indexPath, segs,
-          hits.select("id").distinct(), m.getDouble(0), m.getDouble(1))
+        writeTombstone(spark, scope, hits.select("id").distinct(),
+          m.getDouble(0), m.getDouble(1))
     }
   }
 
@@ -524,13 +524,10 @@ object InvertedIndex {
     if (fs.exists(marker)) return
     if (!docs.isEmpty) {
       val ownName = s"seg-batch-$batchId"
-      val all = committedSegments(spark, indexPath)
-      val others = all.filterNot(s =>
-        new org.apache.hadoop.fs.Path(s).getName == ownName)
-      val (buckets, positions, analyzer) =
-        if (all.isEmpty) (bucketsIfNew, false, "standard")
-        else segMeta(spark, all)
-      if (others.nonEmpty) tombstoneLiveOf(docs, idCol, indexPath, others)
+      val snap = SegmentStore.snapshot(spark, indexPath)
+      val others = snap.copy(segs = snap.segs.filterNot(_.name == ownName))
+      val (buckets, positions, analyzer) = layoutOr(snap, bucketsIfNew)
+      if (others.segs.nonEmpty) tombstoneLiveOf(docs, idCol, others)
       writeSegmentNamed(docs, idCol, textCol, indexPath, ownName, buckets,
         positions, analyzer)
     }
@@ -593,15 +590,12 @@ object InvertedIndex {
       val nUpserts = r.getLong(3)
       if (r.getLong(0) > 0) {
         val ownName = s"seg-batch-$batchId"
-        val all = committedSegments(spark, indexPath)
-        val others = all.filterNot(s =>
-          new org.apache.hadoop.fs.Path(s).getName == ownName)
-        val (buckets, positions, analyzer) =
-          if (all.isEmpty) (bucketsIfNew, false, "standard")
-          else segMeta(spark, all)
+        val snap = SegmentStore.snapshot(spark, indexPath)
+        val others = snap.copy(segs = snap.segs.filterNot(_.name == ownName))
+        val (buckets, positions, analyzer) = layoutOr(snap, bucketsIfNew)
         // ONE tombstone covers both kinds of event: an upsert's stale
         // version and a delete's live version die the same way
-        if (others.nonEmpty) tombstoneLiveOf(evs, "id", indexPath, others)
+        if (others.segs.nonEmpty) tombstoneLiveOf(evs, "id", others)
         if (nUpserts > 0)
           writeSegmentNamed(evs.filter(col("_op") === "upsert")
               .select(col("id").as(idCol), col("_text").as(textCol)),
@@ -620,14 +614,15 @@ object InvertedIndex {
     * index so every segment shares one layout.
     */
   def append(docs: DataFrame, idCol: String, textCol: String,
-             indexPath: String): Unit = {
-    val spark = docs.sparkSession
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val (buckets, positions, analyzer) = segMeta(spark, segs)
-    writeSegment(docs, idCol, textCol, indexPath, buckets,
-      positions, analyzer)
+             indexPath: String): Unit =
+    appendTo(docs, idCol, textCol,
+      SegmentStore.open(docs.sparkSession, indexPath))
+
+  private def appendTo(docs: DataFrame, idCol: String, textCol: String,
+                       snap: SegmentStore.Snapshot): Unit = {
+    val live = liveOf(snap)
+    writeSegment(docs, idCol, textCol, snap.root, live.buckets,
+      live.positions, live.analyzer)
   }
 
   /** Idempotent per-batch ingest for streaming drivers
@@ -662,10 +657,8 @@ object InvertedIndex {
     val marker = SegmentStore.ingestMarker(indexPath, batchId)
     if (fs.exists(marker)) return
     if (!docs.isEmpty) {
-      val segs = committedSegments(spark, indexPath)
       val (buckets, positions, analyzer) =
-        if (segs.isEmpty) (bucketsIfNew, false, "standard")
-        else segMeta(spark, segs)
+        layoutOr(SegmentStore.snapshot(spark, indexPath), bucketsIfNew)
       writeSegmentNamed(docs, idCol, textCol, indexPath,
         s"seg-batch-$batchId", buckets, positions, analyzer)
     }
@@ -713,19 +706,6 @@ object InvertedIndex {
     * compaction this is OFFLINE maintenance: run without concurrent
     * searches.
     */
-  /** Drop marker-less crash leftovers (a segment whose append died
-    * before its stats commit, a tombstone batch whose deleteDocs died
-    * likewise): no reader consumes them, but left alone they
-    * accumulate forever on a long-lived index and every
-    * committedSegments/committedDeletes listing stat-probes them.
-    * Safe under compact()'s offline single-writer contract — nothing
-    * is mid-write while this runs. (The registry compaction's sweep in
-    * Dedup.compactDir is this same discipline.)
-    */
-  private def sweepUncommitted(fs: org.apache.hadoop.fs.FileSystem,
-                               indexPath: String): Unit =
-    SegmentStore.sweepUncommitted(fs, indexPath)
-
   /** `lensBuckets` sizes the compacted segment's id-bucketed lens
     * ledger — the build side of every later upsert/CDC/delete probe
     * ([[tombstoneLiveOf]]/[[deleteDocsScoped]]): bucketed by id, the
@@ -739,13 +719,15 @@ object InvertedIndex {
   def compact(spark: SparkSession, indexPath: String,
               lensBuckets: Int = 0): Unit = {
     heal(spark, indexPath)
-    sweepUncommitted(fsOf(spark, indexPath), indexPath)
-    val segs = committedSegments(spark, indexPath)
-    val dels = committedDeletes(spark, indexPath)
+    // marker-less crash leftovers go first (offline single-writer
+    // contract): no reader consumes them, but every listing probes them
+    SegmentStore.sweepUncommitted(fsOf(spark, indexPath), indexPath)
+    val snap = SegmentStore.snapshot(spark, indexPath)
+    val (segs, dels) = (snap.segs, snap.dels)
     if (segs.length > 1 || (dels.nonEmpty && segs.nonEmpty)) {
       val fs = fsOf(spark, indexPath)
-      val (_, positions, analyzer) = segMeta(spark, segs)
-      val live = liveLens(spark, segs, dels)
+      val meta = liveOf(snap)
+      val live = liveLensFrames(spark, snap).reduce(_ unionByName _)
         .drop("_seg").localCheckpoint(true)
       // ONE agg over the checkpointed live ledger serves the
       // empty-index check below AND the merged stats moments — the
@@ -769,8 +751,7 @@ object InvertedIndex {
       val name = s"seg-${java.util.UUID.randomUUID()}"
       val seg = s"$indexPath/segments/$name"
       val inputs =
-        segs.map(s => "segments/" + new org.apache.hadoop.fs.Path(s).getName) ++
-        dels.map(d => "deletes/" + new org.apache.hadoop.fs.Path(d).getName)
+        segs.map("segments/" + _.name) ++ dels.map("deletes/" + _.name)
       Manifest.write(fs, manifestPath(indexPath),
         s"segments/$name" +: inputs)
       // r18 (the r17 ADVICE ask): a compaction rewrites every posting
@@ -782,10 +763,8 @@ object InvertedIndex {
       // lands in the merged stats doc, which is where every search
       // and later append reads it; bucket ids never reach results.
       val tb = autoBuckets(m.getDouble(1))
-      val mergedLive =
-        (if (dels.isEmpty) mergedPostings(spark, segs, identity)
-         else mergedLivePostings(spark, segs, dels, identity))
-          .withColumn("bucket", termBucket(col("term"), tb))
+      val mergedLive = SegmentStore.liveRows(spark, snap, "postings")
+        .withColumn("bucket", termBucket(col("term"), tb))
       // postings and the lens ledger are independent reads (merged
       // postings vs the checkpointed live lens) — overlap them
       // (guide §2.6); stats stays last as the commit marker
@@ -807,56 +786,13 @@ object InvertedIndex {
           live.repartition(lb, col("id")),
           s"$seg/lens", Seq("id"), lb)))
       writeSegStats(spark, seg, m.getDouble(0), m.getDouble(1),
-        tb, positions, analyzer, Seq(
+        tb, meta.positions, meta.analyzer, Seq(
           "postings" -> SegmentStore.writtenSchema(mergedLive, Seq("bucket")),
           "lens" -> SegmentStore.writtenSchema(live)))
       (segs ++ dels).foreach(s =>
-        fs.delete(new org.apache.hadoop.fs.Path(s), true))
+        fs.delete(new org.apache.hadoop.fs.Path(s.path), true))
       Manifest.delete(fs, manifestPath(indexPath))
     }
-  }
-
-  /** Tombstone-adjusted corpus moments + the shared bucket count: ONE
-    * driver-side read of the (one-row-per-segment/tombstone) stats
-    * tables, feeding [[searchTopK]], [[termStats]], and [[stats]] so
-    * the accounting cannot desynchronize between them.
-    */
-  private[operators] final case class LiveStats(n: Double, sumLen: Double,
-                                     buckets: Int, analyzer: String) {
-    /** Query-term analysis matching the chain the postings were built
-      * with: lowercase always, plus the minimal stem under "english".
-      * Idempotent (every stemmer output is a fixed point), so terms
-      * that already went through resolution (fuzzy) re-analyze safely.
-      */
-    def analyzeTerm(t: String): String =
-      graft.functions.EnglishMinimalStem.analyzeTerm(analyzer,
-        t.toLowerCase(java.util.Locale.ROOT))
-  }
-
-  private[operators] def liveStats(spark: SparkSession, segs: Seq[String],
-                        dels: Seq[String]): LiveStats = {
-    val segStats = segs.map(readSegStats(spark, _))
-    val delStats = dels.map(readDelStats(spark, _))
-    // analyzer is uniform across segments (every writer inherits it)
-    LiveStats(
-      segStats.map(_.n).sum - delStats.map(_._1).sum,
-      segStats.map(_.sumLen).sum - delStats.map(_._2).sum,
-      segStats.head.buckets, segStats.head.analyzer)
-  }
-
-  /** [[liveStats]] for MANY indexes — since the stats sidecars are
-    * driver-side docs (r17-opt) this is a plain loop: zero Spark jobs
-    * for a wide [[FieldedIndex]] root's per-field corpus moments.
-    */
-  private[operators] def liveStatsBatch(
-      spark: SparkSession,
-      perIndex: Seq[(String, Seq[String], Seq[String])])
-      : Map[String, LiveStats] = {
-    require(perIndex.forall(_._2.nonEmpty),
-      "liveStatsBatch over an index with no committed segments")
-    perIndex.map { case (tag, segs, dels) =>
-      tag -> liveStats(spark, segs, dels)
-    }.toMap
   }
 
   /** The live postings of `terms` (already lowercased/distinct):
@@ -864,16 +800,20 @@ object InvertedIndex {
     * planning time (spec-pinned), term IN (...) pushes to the parquet
     * reader, and tombstoned docs are subtracted when tombstones exist.
     */
-  private[operators] def prunedLivePostings(spark: SparkSession, segs: Seq[String],
-                                 dels: Seq[String], terms: Seq[String],
-                                 buckets: Int): DataFrame = {
-    val wanted = terms.map(bucketOf(_, buckets)).distinct
-    val prune: DataFrame => DataFrame =
+  private def prunedLivePostings(spark: SparkSession, live: LiveIndex,
+                                 terms: Seq[String]): DataFrame = {
+    val wanted = terms.map(bucketOf(_, live.buckets)).distinct
+    livePostings(spark, live,
       _.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term").isin(terms: _*))
-    if (dels.isEmpty) mergedPostings(spark, segs, prune)
-    else mergedLivePostings(spark, segs, dels, prune)
+        .filter(col("term").isin(terms: _*)))
   }
+
+  /** Live document frequency `_df` (double) per term of `postings`:
+    * postings rows are unique per (term, id) across segments (the
+    * append contract), so df is the row count per term.
+    */
+  private def docFreqs(postings: DataFrame): DataFrame =
+    postings.groupBy("term").agg(count(lit(1)).cast("double").as("_df"))
 
   /** Index observability — the ES indices-stats face: one row of live
     * corpus moments and structural counts. `n_docs`/`sum_len`/
@@ -882,17 +822,13 @@ object InvertedIndex {
     * compaction cadence watches.
     */
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val st = openLive(spark, indexPath)
     spark.range(1).select(
       lit(st.n.toLong).as("n_docs"),
       lit(st.sumLen).as("sum_len"),
       lit(if (st.n > 0) st.sumLen / st.n else 0.0).as("avg_len"),
-      lit(segs.length).as("segments"),
-      lit(dels.length).as("tombstone_batches"),
+      lit(st.snap.segs.length).as("segments"),
+      lit(st.snap.dels.length).as("tombstone_batches"),
       lit(st.buckets).as("buckets"))
   }
 
@@ -904,13 +840,8 @@ object InvertedIndex {
   def termStats(spark: SparkSession, indexPath: String,
                 terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty)
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    prunedLivePostings(spark, segs, dels,
-        terms.map(st.analyzeTerm).distinct, st.buckets)
+    val st = openLive(spark, indexPath)
+    prunedLivePostings(spark, st, terms.map(st.analyzeTerm).distinct)
       .groupBy("term").agg(count(lit(1)).cast("long").as("df"))
   }
 
@@ -924,35 +855,32 @@ object InvertedIndex {
                  idColName: String = "id",
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty && k > 0)
-    val segs = committedSegments(spark, indexPath)
-    // fail LOUDLY on a never-built / crashed-before-first-commit
-    // index: an empty result would read as "no matches"
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    // ONE driver-side read of the (one-per-segment) stats docs serves
-    // n, avg len, AND the bucket count — the serving path runs no job
-    // before the caller's action, and the corpus stats enter the plan as
-    // literals instead of a crossJoin. Committed tombstone batches
-    // subtract their (pre-charged, lens-exact) moments the same way,
-    // and tombstoned docs drop out of the postings BEFORE df counts
-    // rows — idf, tf, and the corpus stats all see only live docs.
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val terms = queryTerms.map(st.analyzeTerm).distinct
-    rawTermScores(spark, segs, dels, st, terms, idColName, k1, b)
+    // ONE snapshot's docs serve n, avg len, AND the bucket count — the
+    // serving path runs no job before the caller's action, and the
+    // corpus stats enter the plan as literals instead of a crossJoin.
+    // Committed tombstone batches subtract their (pre-charged,
+    // lens-exact) moments the same way, and tombstoned docs drop out of
+    // the postings BEFORE df counts rows — idf, tf, and the corpus
+    // stats all see only live docs.
+    topK(spark, openLive(spark, indexPath), queryTerms, k, idColName, k1, b)
+  }
+
+  private def topK(spark: SparkSession, st: LiveIndex,
+                   queryTerms: Seq[String], k: Int, idColName: String,
+                   k1: Double, b: Double): DataFrame =
+    rawTermScores(spark, st, queryTerms.map(st.analyzeTerm).distinct,
+        idColName, k1, b)
       .orderBy(col("score").desc, col(idColName))
       .limit(k)
-  }
 
   /** The (id, rounded score) frame behind [[searchTopK]] and
     * [[searchAfter]] — one pruned postings read, broadcast df,
     * per-doc Okapi sum with the single 6-dp rounding.
     */
-  private def rawTermScores(spark: SparkSession, segs: Seq[String],
-                            dels: Seq[String], st: LiveStats,
+  private def rawTermScores(spark: SparkSession, st: LiveIndex,
                             terms: Seq[String], idColName: String,
                             k1: Double, b: Double): DataFrame =
-    rawTermContribs(spark, segs, dels, st, terms, k1, b)
+    rawTermContribs(spark, st, terms, k1, b)
       .groupBy(col("id").as(idColName))
       .agg(round(sum(col("_s")), 6).as("score"))
 
@@ -963,27 +891,14 @@ object InvertedIndex {
     * gate and score boolean clauses per field.
     */
   private[operators] def rawTermContribs(spark: SparkSession,
-                                         segs: Seq[String],
-                                         dels: Seq[String],
-                                         st: LiveStats,
+                                         st: LiveIndex,
                                          terms: Seq[String],
                                          k1: Double,
                                          b: Double): DataFrame = {
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
-    val p = prunedLivePostings(spark, segs, dels, terms, st.buckets)
-    // postings rows are unique per (term, id) across segments (the
-    // append contract): df = row count per term
-    val dfreq = p.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("_df"))
-    p.join(broadcast(dfreq), Seq("term"))
-      .withColumn("_idf",
-        log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5)))
-      .withColumn("_s",
-        col("_idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
-      .select(col("id"), col("term"), col("_s"))
+    val p = prunedLivePostings(spark, st, terms)
+    p.join(broadcast(docFreqs(p)), Seq("term"))
+      .select(col("id"), col("term"), bm25(bm25Idf(st.n, col("_df")),
+        col("tf"), col("len"), st.avgLen, k1, b).as("_s"))
   }
 
   /** Index-served search with a SEARCH-TIME synonym set
@@ -1009,11 +924,7 @@ object InvertedIndex {
                          k1: Double = 1.2,
                          b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty && k > 0)
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val st = openLive(spark, indexPath)
     val syn = graft.functions.Synonyms.parse(synonymRules)
       .map { case (f, ts) =>
         st.analyzeTerm(f) -> ts.map(st.analyzeTerm).distinct.sorted
@@ -1022,10 +933,8 @@ object InvertedIndex {
       .map(t => syn.getOrElse(t, Seq(t))).distinct
     val allTerms = groups.flatten.distinct
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
-    val p = prunedLivePostings(spark, segs, dels, allTerms, st.buckets)
-    val dfMap = p.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("_df"))
+    val p = prunedLivePostings(spark, st, allTerms)
+    val dfMap = docFreqs(p)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val gdf: Seq[Double] =
       groups.map(g => g.map(t => dfMap.getOrElse(t, 0.0)).max)
@@ -1041,10 +950,7 @@ object InvertedIndex {
     val scoreCols = groups.indices.map { gi =>
       val tfc = col(s"_g${gi}_tf")
       val idf = math.log(1.0 + (n - gdf(gi) + 0.5) / (gdf(gi) + 0.5))
-      when(tfc.isNotNull,
-        lit(idf) * tfc * (k1 + 1.0) /
-          (tfc + lit(k1) *
-            (lit(1.0) - b + lit(b) * col("_len") / lit(avg))))
+      when(tfc.isNotNull, bm25(lit(idf), tfc, col("_len"), st.avgLen, k1, b))
         .otherwise(lit(0.0))
     }
     perDoc
@@ -1070,13 +976,9 @@ object InvertedIndex {
                   idColName: String = "id",
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty && k > 0)
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val terms = queryTerms.map(st.analyzeTerm).distinct
-    rawTermScores(spark, segs, dels, st, terms, idColName, k1, b)
+    val st = openLive(spark, indexPath)
+    rawTermScores(spark, st, queryTerms.map(st.analyzeTerm).distinct,
+        idColName, k1, b)
       .filter(col("score") < afterScore ||
         (col("score") === afterScore && col(idColName) > lit(afterId)))
       .orderBy(col("score").desc, col(idColName))
@@ -1116,13 +1018,7 @@ object InvertedIndex {
     require(must.nonEmpty || should.nonEmpty,
       "pure-negative bool (only must_not) is a corpus scan, not an " +
         "index lookup — refuse rather than silently scanning")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val st = openLive(spark, indexPath)
     val mustT = must.map(st.analyzeTerm).distinct
     val shouldT = should.map(st.analyzeTerm).distinct
       .filterNot(mustT.contains)
@@ -1138,15 +1034,11 @@ object InvertedIndex {
       s"minimum_should_match $msm exceeds ${shouldT.size} should terms")
     val scoredT = mustT ++ shouldT
     val allT = scoredT ++ notT
-    val p = prunedLivePostings(spark, segs, dels, allT, st.buckets)
-    val dfreq = p.filter(col("term").isin(scoredT: _*))
-      .groupBy("term").agg(count(lit(1)).cast("double").as("_df"))
+    val p = prunedLivePostings(spark, st, allT)
+    val dfreq = docFreqs(p.filter(col("term").isin(scoredT: _*)))
     val contrib =
-      when(col("term").isin(scoredT: _*),
-        log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5)) *
-          col("tf") * (k1 + 1.0) /
-          (col("tf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
+      when(col("term").isin(scoredT: _*), bm25(bm25Idf(st.n, col("_df")),
+          col("tf"), col("len"), st.avgLen, k1, b))
         .otherwise(lit(0.0))
     p.join(broadcast(dfreq), Seq("term"), "left")
       .groupBy(col("id").as(idColName))
@@ -1224,13 +1116,8 @@ object InvertedIndex {
       minShouldMatchPct <= 100,
       "moreLikeThisTopK: k/maxQueryTerms >= 1, minTermFreq/minDocFreq " +
         ">= 1, minShouldMatchPct in [0, 100]")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val st = openLive(spark, indexPath)
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
     // 1. like-text term frequencies through the index's analysis chain
     // (tokensOf = the driver twin of TextAnalysis.tokens, so like-text
     // tf can never desynchronize from index postings)
@@ -1239,23 +1126,11 @@ object InvertedIndex {
         .analyzeTerm(st.analyzer, t))
       .groupBy(identity).view.mapValues(_.length).toMap
       .filter(_._2 >= minTermFreq)
-    val empty = {
-      // typed empty result: id type from the postings schema (footer
-      // read only; the lens dir may be bucketed on compacted segments)
-      val idT = postingsOf(spark, segs.head).schema("id")
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          idT.copy(name = idColName),
-          org.apache.spark.sql.types.StructField("score",
-            org.apache.spark.sql.types.DoubleType))))
-    }
+    def empty = emptyScores(spark, st, idColName)
     if (likeTf.isEmpty) return empty
     // 2. live df of the candidates — one bucket-pruned read, bounded
     // collect (≤ |like terms| rows)
-    val dfMap = prunedLivePostings(spark, segs, dels,
-        likeTf.keys.toSeq, st.buckets)
-      .groupBy("term").agg(count(lit(1)).cast("double").as("_df"))
+    val dfMap = docFreqs(prunedLivePostings(spark, st, likeTf.keys.toSeq))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     // 3. selection: like-tf · idf, 6-dp rounded, term-asc ties
     val selected = likeTf.toSeq
@@ -1272,21 +1147,15 @@ object InvertedIndex {
     // 4./5. BM25 over the selected terms (searchTopK's formula and
     // rounding) + the distinct-matched-terms cut; the exclusion
     // filters RESULT rows after df is counted, so df matches ES's
-    val p = prunedLivePostings(spark, segs, dels, selected, st.buckets)
-    val dfreq = p.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("_df"))
-    val scoredRows = p.join(broadcast(dfreq), Seq("term"))
+    val p = prunedLivePostings(spark, st, selected)
+    val scoredRows = p.join(broadcast(docFreqs(p)), Seq("term"))
     val resultRows = excludeId match {
       case Some(x) => scoredRows.filter(col("id") =!= lit(x))
       case None    => scoredRows
     }
     resultRows
-      .withColumn("_idf",
-        log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5)))
-      .withColumn("_s",
-        col("_idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
+      .withColumn("_s", bm25(bm25Idf(n, col("_df")), col("tf"), col("len"),
+        st.avgLen, k1, b))
       .groupBy(col("id").as(idColName))
       .agg(round(sum(col("_s")), 6).as("score"),
         count(lit(1)).as("_nt")) // postings unique per (term, id)
@@ -1326,36 +1195,21 @@ object InvertedIndex {
     require(indexPaths.distinct.size == indexPaths.size,
       s"duplicate index paths: ${indexPaths.mkString(", ")}")
     require(queryTerms.nonEmpty && k > 0)
-    val parts = indexPaths.map { p =>
-      val segs = committedSegments(spark, p)
-      require(segs.nonEmpty,
-        s"$p has no committed segments — build() first")
-      val dels = committedDeletes(spark, p)
-      (p, segs, dels, liveStats(spark, segs, dels))
-    }
-    val analyzers = parts.map(_._4.analyzer).distinct
+    val parts = indexPaths.map(openLive(spark, _))
+    val analyzers = parts.map(_.analyzer).distinct
     require(analyzers.size == 1,
       s"indexes mix analyzers $analyzers — cross-index search needs " +
         "one analysis chain (rebuild with a shared analyzer)")
-    val st0 = parts.head._4
-    val n = parts.map(_._4.n).sum
-    val sumLen = parts.map(_._4.sumLen).sum
-    val avg = if (n > 0) sumLen / n else 1.0
-    val terms = queryTerms.map(st0.analyzeTerm).distinct
+    val n = parts.map(_.n).sum
+    val avg = avgLen(n, parts.map(_.sumLen).sum)
+    val terms = queryTerms.map(parts.head.analyzeTerm).distinct
     // each index prunes with its own bucket count; rows are disjoint
     // across indexes (the id contract), so df = row count per term
-    val p = parts.map { case (_, segs, dels, st) =>
-      prunedLivePostings(spark, segs, dels, terms, st.buckets)
-    }.reduce(_ unionByName _)
-    val dfreq = p.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("_df"))
-    p.join(broadcast(dfreq), Seq("term"))
-      .withColumn("_idf",
-        log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5)))
-      .withColumn("_s",
-        col("_idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
+    val p = parts.map(prunedLivePostings(spark, _, terms))
+      .reduce(_ unionByName _)
+    p.join(broadcast(docFreqs(p)), Seq("term"))
+      .withColumn("_s", bm25(bm25Idf(n, col("_df")), col("tf"), col("len"),
+        avg, k1, b))
       .groupBy(col("id").as(idColName))
       .agg(round(sum(col("_s")), 6).as("score"))
       .orderBy(col("score").desc, col(idColName))
@@ -1406,16 +1260,10 @@ object InvertedIndex {
       s"qIdCol '$qIdCol' collides with the postings/result columns — " +
         "rename the query-id column")
     val spark = queries.sparkSession
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val st = openLive(spark, indexPath)
     // (q_id, term) pairs, analyzed with the index's chain (lowercase,
     // plus the stem under "english" — Column spelling of
-    // LiveStats.analyzeTerm), de-duped within each query so a repeated
+    // LiveIndex.analyzeTerm), de-duped within each query so a repeated
     // term — or two surface forms sharing a stem — cannot double its
     // score contribution
     def analyzed(t: Column): Column =
@@ -1435,26 +1283,16 @@ object InvertedIndex {
     // a null term matches no posting
     val terms = qtRows.map(_.getString(1)).filter(_ != null).distinct.toSeq
     val p =
-      if (terms.size <= maxPushdownTerms)
-        prunedLivePostings(spark, segs, dels, terms, st.buckets)
+      if (terms.size <= maxPushdownTerms) prunedLivePostings(spark, st, terms)
       else {
         val wanted = terms.map(bucketOf(_, st.buckets)).distinct
-        val prune: DataFrame => DataFrame =
-          _.filter(col("bucket").isin(wanted: _*))
-            .join(qt.select("term").distinct(), Seq("term"), "left_semi")
-        if (dels.isEmpty) mergedPostings(spark, segs, prune)
-        else mergedLivePostings(spark, segs, dels, prune)
+        livePostings(spark, st, _.filter(col("bucket").isin(wanted: _*))
+          .join(qt.select("term").distinct(), Seq("term"), "left_semi"))
       }
-    val dfreq = p.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("_df"))
-    val scored = p.join(broadcast(dfreq), Seq("term"))
+    val scored = p.join(broadcast(docFreqs(p)), Seq("term"))
       .join(qt, Seq("term"))
-      .withColumn("_idf",
-        log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5)))
-      .withColumn("_s",
-        col("_idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
+      .withColumn("_s", bm25(bm25Idf(st.n, col("_df")), col("tf"),
+        col("len"), st.avgLen, k1, b))
       .groupBy(col(qIdCol), col("id").as(idColName))
       .agg(round(sum(col("_s")), 6).as("score"))
     Similarity.rankTopKPerQuery(scored, k, qIdCol, idColName, "score")
@@ -1482,14 +1320,7 @@ object InvertedIndex {
                    phrase: Seq[String],
                    idColName: String = "id"): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    require(indexPositions(spark, segs),
-      s"$indexPath was built without positional postings — " +
-        "build(positions = true) enables phraseSearch")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val st = positional(openLive(spark, indexPath), "phraseSearch")
     // analyzeTerm's Locale.ROOT lowercase matches Spark's
     // locale-independent lower() that lowercased the index tokens (a
     // Turkish-locale JVM would otherwise map 'I' → 'ı' and silently
@@ -1497,7 +1328,7 @@ object InvertedIndex {
     // indexed positions did
     val terms = phrase.map(st.analyzeTerm)
     val frames = terms.zipWithIndex.map { case (t, i) =>
-      prunedLivePostings(spark, segs, dels, Seq(t), st.buckets)
+      prunedLivePostings(spark, st, Seq(t))
         .select(col("id"), col("pos").as(s"_pos$i"))
     }
     val joined = frames.reduce((a, b) => a.join(b, Seq("id")))
@@ -1544,7 +1375,7 @@ object InvertedIndex {
                        b: Double = 0.75, slop: Int = 0): DataFrame = {
     require(k > 0, "k must be positive")
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    rawPhraseScores(spark, indexPath, phrase, k1, b, slop = slop)
+    rawPhraseScores(spark, openLive(spark, indexPath), phrase, k1, b, slop)
       .select(col("id").as(idColName), round(col("_fs"), 6).as("score"))
       .orderBy(col("score").desc, col(idColName))
       .limit(k)
@@ -1580,35 +1411,13 @@ object InvertedIndex {
     require(k > 0, "k must be positive")
     val qs = graft.functions.TextAnalysis.tokensOf(query)
     require(qs.nonEmpty, "query analyzes to no terms")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    require(indexPositions(spark, segs),
-      s"$indexPath was built without positional postings — " +
-        "build(positions = true) enables phrase-prefix search")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val st = positional(openLive(spark, indexPath), "phrase-prefix search")
     val full = qs.init.map(st.analyzeTerm)
-    val (p0, exts, _) = vocabPrefixCandidates(spark, indexPath,
-      st.analyzeTerm(qs.last), maxCandidates, Some(segs))
-    val idT = postingsOf(spark, segs.head).schema("id")
-    def emptyResult = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        idT.copy(name = idColName),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
-    if (exts.isEmpty) return emptyResult
-    val wanted = exts.map(bucketOf(_, st.buckets)).distinct
-    val prune: DataFrame => DataFrame =
-      _.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term") >= p0 && col("term") < p0 + '￿')
-        .filter(col("term").startsWith(p0))
-    val cand =
-      if (dels.isEmpty) mergedPostings(spark, segs, prune)
-      else mergedLivePostings(spark, segs, dels, prune)
+    val (p0, exts) = vocabPrefixCandidates(spark, st,
+      st.analyzeTerm(qs.last), maxCandidates)
+    if (exts.isEmpty)
+      return emptyScores(spark, st, idColName, scoreNullable = false)
+    val cand = livePostings(spark, st, prefixPrune(st, p0, exts))
     // all prefix-token positions per doc (several candidate terms can
     // hit one doc); bounded by doc length
     val pp = cand.select(col("id"), explode(col("pos")).as("_pp"))
@@ -1617,10 +1426,7 @@ object InvertedIndex {
       // bare prefix box: constant score, id order (ES's behavior)
       return pp.select(col("id").as(idColName), lit(1.0).as("score"))
         .orderBy(col(idColName)).limit(k)
-    val all = prunedLivePostings(spark, segs, dels, full.distinct,
-      st.buckets)
-    val dfreq = all.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("_df"))
+    val all = prunedLivePostings(spark, st, full.distinct)
     val frames = full.zipWithIndex.map { case (t, i) =>
       val base = all.filter(col("term") === t)
       if (i == 0) base.select(col("id"), col("len"),
@@ -1634,14 +1440,11 @@ object InvertedIndex {
       ((1 until m).map(i => array_contains(col(s"_pos$i"), p + i)) :+
         array_contains(col("_ppos"), p + m)).reduce(_ && _)))
     joined
-      .crossJoin(broadcast(phraseIdfSum(dfreq, full, n)))
+      .crossJoin(broadcast(phraseIdfSum(docFreqs(all), full, st.n)))
       .withColumn("_ptf", ptf.cast("double"))
       .filter(col("_ptf") > 0)
-      .withColumn("score", round(
-        col("_tidf") * col("_ptf") * (k1 + 1.0) /
-          (col("_ptf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg)))
-          + 1.0, 6))
+      .withColumn("score", round(bm25(col("_tidf"), col("_ptf"), col("len"),
+        st.avgLen, k1, b) + 1.0, 6))
       .select(col("id").as(idColName), col("score"))
       .orderBy(col("score").desc, col(idColName))
       .limit(k)
@@ -1654,34 +1457,17 @@ object InvertedIndex {
     * combined score there, the [[FieldedIndex]] discipline).
     */
   private[operators] def rawPhraseScores(spark: SparkSession,
-                                         indexPath: String,
+                                         live: LiveIndex,
                                          phrase: Seq[String],
                                          k1: Double,
                                          b: Double,
-                                         pre: Option[(Seq[String],
-                                           Seq[String], LiveStats)] = None,
                                          slop: Int = 0)
       : DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    val segs = pre.map(_._1).getOrElse(committedSegments(spark, indexPath))
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    require(indexPositions(spark, segs),
-      s"$indexPath was built without positional postings — " +
-        "build(positions = true) enables phrase scoring")
-    val dels = pre.map(_._2).getOrElse(committedDeletes(spark, indexPath))
-    val st = pre.map(_._3).getOrElse(liveStats(spark, segs, dels))
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val st = positional(live, "phrase scoring")
     val terms = phrase.map(st.analyzeTerm)
-    val all = prunedLivePostings(spark, segs, dels, terms.distinct,
-      st.buckets)
-    // per-term document frequencies: postings rows are unique per
-    // (term, id) across segments, so df = row count per term —
-    // ≤ |phrase| rows, broadcast
-    val dfreq = all.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("_df"))
+    val all = prunedLivePostings(spark, st, terms.distinct)
     val frames = terms.zipWithIndex.map { case (t, i) =>
       val base = all.filter(col("term") === t)
       // len rides term 0's frame (identical on every frame)
@@ -1726,15 +1512,24 @@ object InvertedIndex {
         size(filter(col("_pos0"), p =>
           chain(1, p, p, List((terms.head, p)))))
       }
+    // per-term document frequencies: ≤ |phrase| rows, broadcast
     joined
-      .crossJoin(broadcast(phraseIdfSum(dfreq, terms, n)))
+      .crossJoin(broadcast(phraseIdfSum(docFreqs(all), terms, st.n)))
       .withColumn("_ptf", ptf.cast("double"))
       .filter(col("_ptf") > 0)
-      .withColumn("_fs",
-        col("_tidf") * col("_ptf") * (k1 + 1.0) /
-          (col("_ptf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
+      .withColumn("_fs", bm25(col("_tidf"), col("_ptf"), col("len"),
+        st.avgLen, k1, b))
       .select(col("id"), col("_fs"))
+  }
+
+  /** `live` when its index stores positional postings, else a refusal
+    * naming the call that needs them.
+    */
+  private def positional(live: LiveIndex, what: String): LiveIndex = {
+    require(live.positions,
+      s"${live.snap.root} was built without positional postings — " +
+        s"build(positions = true) enables $what")
+    live
   }
 
   /** The phrase idf as a one-row frame `_tidf`: Σ idf over `terms` IN
@@ -1747,8 +1542,7 @@ object InvertedIndex {
   private def phraseIdfSum(dfreq: DataFrame, terms: Seq[String],
                            n: Double): DataFrame = {
     val distinct = terms.distinct
-    val idf =
-      log(lit(1.0) + (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5))
+    val idf = bm25Idf(n, col("_df"))
     val perTerm = distinct.zipWithIndex.map { case (t, j) =>
       max(when(col("term") === t, idf)).as(s"_idf$j")
     }
@@ -1793,10 +1587,9 @@ object InvertedIndex {
     * window, where a stale dictionary would pass a fresh check).
     */
   def buildFuzzyDictionary(spark: SparkSession, indexPath: String): Unit = {
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val terms = mergedPostings(spark, segs, identity)
+    val snap = SegmentStore.open(spark, indexPath)
+    val terms = SegmentStore.liveRows(spark, snap.withoutTombstones,
+        "postings")
       .select("term").distinct()
     // deletion neighborhood as pure Column ops over code points:
     // variant i = the term minus code point i, plus the term itself
@@ -1810,13 +1603,13 @@ object InvertedIndex {
       .distinct()
       .write.mode("overwrite").parquet(s"$indexPath/fuzzy")
     import spark.implicits._
-    segNames(segs).toDF("segment")
+    segNames(snap).toDF("segment")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$indexPath/fuzzy_segments")
   }
 
-  private def segNames(segs: Seq[String]): Seq[String] =
-    segs.map(s => new org.apache.hadoop.fs.Path(s).getName).sorted
+  private def segNames(snap: SegmentStore.Snapshot): Seq[String] =
+    snap.segs.map(_.name).sorted
 
   /** The driver-side spelling of the same neighborhood (query side). */
   private def deletionVariants(term: String): Seq[String] = {
@@ -1845,11 +1638,10 @@ object InvertedIndex {
                       k1: Double = 1.2, b: Double = 0.75,
                       maxCandidates: Int = 10000): DataFrame = {
     require(queryTerms.nonEmpty && k > 0)
-    val (_, lowered, byQuery) =
-      fuzzyResolve(spark, indexPath, queryTerms, maxCandidates)
+    val st = openLive(spark, indexPath)
+    val (lowered, byQuery) = fuzzyResolve(spark, st, queryTerms, maxCandidates)
     val resolved = byQuery.values.flatten.toSeq.distinct
-    searchTopK(spark, indexPath,
-      if (resolved.nonEmpty) resolved else lowered,
+    topK(spark, st, if (resolved.nonEmpty) resolved else lowered,
       k, idColName, k1, b)
   }
 
@@ -1858,9 +1650,10 @@ object InvertedIndex {
     * distance 1 (INCLUDING the term itself when it is in the
     * vocabulary — callers decide what to do with exact hits).
     */
-  private def fuzzyResolve(spark: SparkSession, indexPath: String,
+  private def fuzzyResolve(spark: SparkSession, st: LiveIndex,
                            queryTerms: Seq[String], maxCandidates: Int)
-  : (LiveStats, Seq[String], Map[String, Seq[String]]) = {
+  : (Seq[String], Map[String, Seq[String]]) = {
+    val indexPath = st.snap.root
     val fs = fsOf(spark, indexPath)
     require(fs.exists(
       new org.apache.hadoop.fs.Path(s"$indexPath/fuzzy/_SUCCESS")),
@@ -1874,20 +1667,16 @@ object InvertedIndex {
       s"$indexPath/fuzzy has no segment fingerprint (built by an " +
         "older version, or the build crashed) — buildFuzzyDictionary() " +
         "again")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
     val recorded = spark.read.parquet(s"$indexPath/fuzzy_segments")
       .collect().map(_.getString(0)).sorted.toSeq
-    require(recorded == segNames(segs),
+    require(recorded == segNames(st.snap),
       s"$indexPath/fuzzy is STALE: it was built from segments " +
-        s"$recorded but the index now has ${segNames(segs)} — " +
+        s"$recorded but the index now has ${segNames(st.snap)} — " +
         "appended/compacted vocabulary would silently miss from fuzzy " +
         "resolution; buildFuzzyDictionary() again")
     // query terms run the index's analysis chain FIRST (the ES order:
     // fuzziness applies to analyzed terms) — the vocabulary the
     // dictionary was derived from is already analyzed
-    val st = liveStats(spark, segs, committedDeletes(spark, indexPath))
     val lowered = queryTerms.map(st.analyzeTerm).distinct
     val qVariants = lowered.flatMap(t =>
       deletionVariants(t).map(_ -> t)).groupBy(_._1)
@@ -1924,8 +1713,7 @@ object InvertedIndex {
       val v = r.getString(0); val t = r.getString(1)
       qVariants.getOrElse(v, Nil).filter(q => lev(q, t) <= 1).map(_ -> t)
     }.toSeq.distinct
-    (st, lowered,
-      pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
+    (lowered, pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
   }
 
   /** ES's TERM SUGGESTER served from the fuzzy dictionary: vocabulary
@@ -1953,8 +1741,8 @@ object InvertedIndex {
     require(k > 0, "k must be positive")
     require(Seq("missing", "popular", "always").contains(mode),
       s"unknown suggest mode '$mode' (missing, popular, always)")
-    val (st, lowered, byQuery) =
-      fuzzyResolve(spark, indexPath, Seq(term), maxCandidates)
+    val st = openLive(spark, indexPath)
+    val (lowered, byQuery) = fuzzyResolve(spark, st, Seq(term), maxCandidates)
     val analyzed = lowered.head
     val neighbors = byQuery.getOrElse(analyzed, Nil)
     import spark.implicits._
@@ -1962,9 +1750,7 @@ object InvertedIndex {
       .toDF("term", "df", "distance")
     if (neighbors.isEmpty) return empty
     // one bucket-pruned live-df read over the bounded candidate set
-    val segs = committedSegments(spark, indexPath)
-    val dels = committedDeletes(spark, indexPath)
-    val dfs = prunedLivePostings(spark, segs, dels, neighbors, st.buckets)
+    val dfs = prunedLivePostings(spark, st, neighbors)
       .groupBy("term").agg(count(lit(1)).cast("long").as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val selfDf = dfs.getOrElse(analyzed, 0L)
@@ -1999,10 +1785,9 @@ object InvertedIndex {
     * driver.
     */
   def buildVocabulary(spark: SparkSession, indexPath: String): Unit = {
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val vocab = mergedPostings(spark, segs, identity)
+    val snap = SegmentStore.open(spark, indexPath)
+    val vocab = SegmentStore.liveRows(spark, snap.withoutTombstones,
+        "postings")
       .select("term").distinct()
     vocab
       .repartitionByRange(8, col("term"))
@@ -2010,10 +1795,65 @@ object InvertedIndex {
       .write.mode("overwrite").parquet(s"$indexPath/vocab")
     SegmentStore.writeDocDir(fsOf(spark, indexPath),
       s"$indexPath/vocab_segments", org.json4s.JObject(
-        "segments" -> org.json4s.JArray(segNames(segs)
+        "segments" -> org.json4s.JArray(segNames(snap)
           .map(org.json4s.JString(_): org.json4s.JValue).toList),
         SegmentStore.schemaField(
           Seq("vocab" -> SegmentStore.writtenSchema(vocab)))))
+  }
+
+  /** The sidecar-read half shared by the prefix faces
+    * ([[suggestCompletions]], [[termsEnum]], [[boolPrefixSearchTopK]],
+    * [[phrasePrefixSearchTopK]]): existence + fingerprint staleness
+    * checks against the call's snapshot (the same segment set its stats
+    * and postings come from), the pushable range read, the loud
+    * candidate cap. Returns (lowercased prefix, candidate terms).
+    */
+  private def vocabPrefixCandidates(spark: SparkSession, st: LiveIndex,
+                                    prefix: String, maxCandidates: Int)
+      : (String, Seq[String]) = {
+    val indexPath = st.snap.root
+    val p = prefix.toLowerCase(java.util.Locale.ROOT)
+    require(p.nonEmpty,
+      "empty prefix would enumerate the whole vocabulary — give at " +
+        "least one character")
+    val fs = fsOf(spark, indexPath)
+    require(fs.exists(
+      new org.apache.hadoop.fs.Path(s"$indexPath/vocab/_SUCCESS")),
+      s"$indexPath has no committed vocabulary sidecar — " +
+        "buildVocabulary() first")
+    val fpDir = s"$indexPath/vocab_segments"
+    require(fs.exists(new org.apache.hadoop.fs.Path(s"$fpDir/_SUCCESS")),
+      s"$indexPath/vocab has no segment fingerprint (built by an " +
+        "older version, or the build crashed) — buildVocabulary() again")
+    val doc = SegmentStore.readDocDir(fs, fpDir)
+    val recorded = ((doc \ "segments") match {
+      case org.json4s.JArray(xs) =>
+        xs.collect { case org.json4s.JString(x) => x }
+      case other => sys.error(s"malformed vocab_segments doc: $other")
+    }).sorted
+    require(recorded == segNames(st.snap),
+      s"$indexPath/vocab is STALE: it was built from segments " +
+        s"$recorded but the index now has ${segNames(st.snap)} — " +
+        "appended/compacted vocabulary would silently miss from " +
+        "prefix resolution; buildVocabulary() again")
+    // ONE job: each scan partition keeps at most cap + 1 terms (a
+    // global limit's incremental take scans partitions in rounds, a
+    // job each); the sidecar is range-partitioned by term, so a
+    // prefix's terms sit in one or two files and the driver receives
+    // about cap + 1 terms at most
+    val cand = spark.read
+      .schema(SegmentStore.recordedSchema(doc, fpDir, "vocab"))
+      .parquet(s"$indexPath/vocab")
+      .filter(col("term") >= p && col("term") < p + '\uffff')
+      .filter(col("term").startsWith(p))
+      .select(col("term")).as(org.apache.spark.sql.Encoders.STRING)
+      .mapPartitions(_.take(maxCandidates + 1))(
+        org.apache.spark.sql.Encoders.STRING)
+      .collect().take(maxCandidates + 1).toSeq
+    require(cand.length <= maxCandidates,
+      s"prefix '$prefix' matched more than $maxCandidates vocabulary " +
+        "terms — lengthen the prefix or raise the cap deliberately")
+    (p, cand)
   }
 
   /** ES's completion suggester from the live index: the top-`k`
@@ -2031,87 +1871,14 @@ object InvertedIndex {
     * Terms whose postings are fully tombstoned have no live df and
     * drop out, so suggestions never resurrect deleted-only terms.
     */
-  /** The sidecar-read half shared by [[suggestCompletions]] and
-    * [[boolPrefixSearchTopK]]: existence + fingerprint staleness
-    * checks, the pushable range read, the loud candidate cap.
-    * Returns (lowercased prefix, candidate terms, committed segments).
-    */
-  /** `preListedSegs`: callers that already listed the committed
-    * segments (to compute corpus stats) pass that snapshot so ONE
-    * listing serves the whole query — a commit landing between two
-    * independent listings would otherwise make stats inconsistent
-    * with the candidate set. The vocabulary fingerprint is checked
-    * against whichever snapshot is used.
-    */
-  private def vocabPrefixCandidates(spark: SparkSession,
-                                    indexPath: String, prefix: String,
-                                    maxCandidates: Int,
-                                    preListedSegs: Option[Seq[String]] = None)
-      : (String, Seq[String], Seq[String]) = {
-    val p = prefix.toLowerCase(java.util.Locale.ROOT)
-    require(p.nonEmpty,
-      "empty prefix would enumerate the whole vocabulary — give at " +
-        "least one character")
-    val fs = fsOf(spark, indexPath)
-    require(fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexPath/vocab/_SUCCESS")),
-      s"$indexPath has no committed vocabulary sidecar — " +
-        "buildVocabulary() first")
-    val fpDir = s"$indexPath/vocab_segments"
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$fpDir/_SUCCESS")),
-      s"$indexPath/vocab has no segment fingerprint (built by an " +
-        "older version, or the build crashed) — buildVocabulary() again")
-    val segs = preListedSegs.getOrElse {
-      val listed = committedSegments(spark, indexPath)
-      require(listed.nonEmpty,
-        s"$indexPath has no committed segments — build() first")
-      listed
-    }
-    val doc = SegmentStore.readDocDir(fs, fpDir)
-    val recorded = ((doc \ "segments") match {
-      case org.json4s.JArray(xs) =>
-        xs.collect { case org.json4s.JString(x) => x }
-      case other => sys.error(s"malformed vocab_segments doc: $other")
-    }).sorted
-    require(recorded == segNames(segs),
-      s"$indexPath/vocab is STALE: it was built from segments " +
-        s"$recorded but the index now has ${segNames(segs)} — " +
-        "appended/compacted vocabulary would silently miss from " +
-        "prefix resolution; buildVocabulary() again")
-    // range bound for row-group pruning + the exact prefix test
-    // (startsWith alone doesn't push as a range); any real char's
-    // first UTF-16 unit sorts below the U+FFFF noncharacter, so the
-    // upper bound never excludes a true extension of the prefix
-    // ONE job: each scan partition keeps at most cap + 1 terms (a
-    // global limit's incremental take scans partitions in rounds, a
-    // job each); the sidecar is range-partitioned by term, so a
-    // prefix's terms sit in one or two files and the driver receives
-    // about cap + 1 terms at most
-    val cand = spark.read
-      .schema(SegmentStore.recordedSchema(doc, fpDir, "vocab"))
-      .parquet(s"$indexPath/vocab")
-      .filter(col("term") >= p && col("term") < p + '￿')
-      .filter(col("term").startsWith(p))
-      .select(col("term")).as(org.apache.spark.sql.Encoders.STRING)
-      .mapPartitions(_.take(maxCandidates + 1))(
-        org.apache.spark.sql.Encoders.STRING)
-      .collect().take(maxCandidates + 1).toSeq
-    require(cand.length <= maxCandidates,
-      s"prefix '$prefix' matched more than $maxCandidates vocabulary " +
-        "terms — lengthen the prefix or raise the cap deliberately")
-    (p, cand, segs)
-  }
-
   def suggestCompletions(spark: SparkSession, indexPath: String,
                          prefix: String, k: Int = 5,
                          maxCandidates: Int = 10000): DataFrame = {
     require(k > 0, "k must be positive")
-    val (p, cand, segs) =
-      vocabPrefixCandidates(spark, indexPath, prefix, maxCandidates)
+    val st = openLive(spark, indexPath)
+    val (p, cand) = vocabPrefixCandidates(spark, st, prefix, maxCandidates)
     import spark.implicits._
     if (cand.isEmpty) return Seq.empty[(String, Long)].toDF("term", "df")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
     // the vocabulary is fingerprint-matched to the live segments, so
     // the candidate set IS exactly "every postings term extending the
     // prefix" — the postings read reuses the same pushable RANGE
@@ -2120,13 +1887,7 @@ object InvertedIndex {
     // bucket directory list (distinct md5 buckets of the candidates,
     // bounded by the index's bucket count) comes from the collected
     // candidates
-    val wanted = cand.map(bucketOf(_, st.buckets)).distinct
-    val prune: DataFrame => DataFrame =
-      _.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term") >= p && col("term") < p + '￿')
-        .filter(col("term").startsWith(p))
-    (if (dels.isEmpty) mergedPostings(spark, segs, prune)
-     else mergedLivePostings(spark, segs, dels, prune))
+    livePostings(spark, st, prefixPrune(st, p, cand))
       .groupBy("term").agg(count(lit(1)).cast("long").as("df"))
       .orderBy(col("df").desc, col("term"))
       .limit(k)
@@ -2147,23 +1908,17 @@ object InvertedIndex {
                 size: Int = 10,
                 searchAfter: Option[String] = None): DataFrame = {
     require(size > 0, "size must be positive")
-    val (p, cand0, segs) =
-      vocabPrefixCandidates(spark, indexPath, prefix, 10000)
+    val st = openLive(spark, indexPath)
+    val (p, cand0) = vocabPrefixCandidates(spark, st, prefix, 10000)
     import spark.implicits._
     val after = searchAfter.map(_.toLowerCase(java.util.Locale.ROOT))
     val cand = after.fold(cand0)(a => cand0.filter(_ > a))
     if (cand.isEmpty) return Seq.empty[String].toDF("term")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val wanted = cand.map(bucketOf(_, st.buckets)).distinct
-    val prune: DataFrame => DataFrame = df0 => {
-      val ranged = df0.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term") >= p && col("term") < p + '￿')
-        .filter(col("term").startsWith(p))
-      after.fold(ranged)(a => ranged.filter(col("term") > a))
-    }
-    (if (dels.isEmpty) mergedPostings(spark, segs, prune)
-     else mergedLivePostings(spark, segs, dels, prune))
+    val ranged = prefixPrune(st, p, cand)
+    livePostings(spark, st, df0 => {
+        val r = ranged(df0)
+        after.fold(r)(a => r.filter(col("term") > a))
+      })
       .select("term").distinct()
       .orderBy(col("term"))
       .limit(size)
@@ -2270,29 +2025,18 @@ object InvertedIndex {
                    onlyIds: Option[Seq[Any]] = None,
                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "explain needs at least one term")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val st = openLive(spark, indexPath)
     val terms = queryTerms.map(st.analyzeTerm).distinct
-    val posts0 = prunedLivePostings(spark, segs, dels, terms, st.buckets)
+    val posts0 = prunedLivePostings(spark, st, terms)
     val posts = onlyIds.fold(posts0)(ids =>
       posts0.filter(col("id").isin(ids: _*)))
     // df comes from the FULL live postings (restricting to onlyIds
     // must not change corpus statistics)
-    val dfreq = posts0.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("df"))
+    val dfreq = docFreqs(posts0).withColumnRenamed("_df", "df")
     posts.join(broadcast(dfreq), Seq("term"))
-      .withColumn("idf",
-        log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("score_contrib", round(
-        col("idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))),
-        6))
+      .withColumn("idf", bm25Idf(st.n, col("df")))
+      .withColumn("score_contrib", round(bm25(col("idf"), col("tf"),
+        col("len"), st.avgLen, k1, b), 6))
       .select(col("id").as(idColName), col("term"),
         col("tf").cast("double").as("tf"),
         col("len").cast("double").as("len"),
@@ -2311,15 +2055,11 @@ object InvertedIndex {
                     query: String, operator: String = "or"): Long = {
     require(operator == "or" || operator == "and",
       s"operator must be or | and, got '$operator'")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val st = openLive(spark, indexPath)
     val terms = graft.functions.TextAnalysis.tokensOf(query)
       .map(st.analyzeTerm).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val posts = prunedLivePostings(spark, segs, dels, terms, st.buckets)
+    val posts = prunedLivePostings(spark, st, terms)
     val ids =
       if (operator == "or") posts.select("id").distinct()
       else posts.groupBy("id")
@@ -2329,7 +2069,7 @@ object InvertedIndex {
     val matched = ids.persist()
     try {
       val nMatched = matched.count()
-      if (nMatched > 0) deleteDocs(matched, indexPath)
+      if (nMatched > 0) deleteDocsScoped(matched, st.snap)
       nMatched
     } finally { matched.unpersist(); () }
   }
@@ -2364,48 +2104,22 @@ object InvertedIndex {
     require(k > 0, "k must be positive")
     val qs = graft.functions.TextAnalysis.tokensOf(query)
     require(qs.nonEmpty, "query analyzes to no terms")
-    val segs0 = committedSegments(spark, indexPath)
-    require(segs0.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs0, dels)
+    val st = openLive(spark, indexPath)
     // the scan face analyzes the LAST term through the full chain
     // too (the prefix is stemmed under "english") — mirror it
     val fullTerms = qs.init.map(st.analyzeTerm).distinct
-    val (p, exts, segs) = vocabPrefixCandidates(spark, indexPath,
-      st.analyzeTerm(qs.last), maxCandidates, Some(segs0))
-    val idT = postingsOf(spark, segs.head).schema("id")
-    def emptyResult = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        idT.copy(name = idColName),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType))))
-    if (exts.isEmpty) return emptyResult
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
-    val wanted = exts.map(bucketOf(_, st.buckets)).distinct
-    val prune: DataFrame => DataFrame =
-      _.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term") >= p && col("term") < p + '￿')
-        .filter(col("term").startsWith(p))
-    val preIds = (if (dels.isEmpty) mergedPostings(spark, segs, prune)
-      else mergedLivePostings(spark, segs, dels, prune))
+    val (p, exts) = vocabPrefixCandidates(spark, st,
+      st.analyzeTerm(qs.last), maxCandidates)
+    if (exts.isEmpty) return emptyScores(spark, st, idColName)
+    val preIds = livePostings(spark, st, prefixPrune(st, p, exts))
       .select("id").distinct()
     val scored =
       if (fullTerms.isEmpty) preIds.select(col("id"), lit(1.0).as("_sc"))
       else {
-        val posts = prunedLivePostings(spark, segs, dels, fullTerms,
-          st.buckets)
-        val dfreq = posts.groupBy("term")
-          .agg(count(lit(1)).cast("double").as("_df"))
-        posts.join(broadcast(dfreq), Seq("term"))
-          .withColumn("_idf", log(lit(1.0) +
-            (lit(n) - col("_df") + 0.5) / (col("_df") + 0.5)))
-          .withColumn("_s",
-            col("_idf") * col("tf") * (k1 + 1.0) /
-              (col("tf") +
-                lit(k1) * (lit(1.0) - b + lit(b) * col("len") / lit(avg))))
+        val posts = prunedLivePostings(spark, st, fullTerms)
+        posts.join(broadcast(docFreqs(posts)), Seq("term"))
+          .withColumn("_s", bm25(bm25Idf(st.n, col("_df")), col("tf"),
+            col("len"), st.avgLen, k1, b))
           .groupBy("id")
           .agg(sum(col("_s")).as("_fs"), count(lit(1)).as("_hits"))
           // bool/AND: every full term must hit (the scan face's fold)

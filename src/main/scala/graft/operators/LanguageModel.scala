@@ -188,6 +188,10 @@ object LanguageModel {
     * vocabulary-sized aggregate (min ordinal + count per group,
     * broadcast back). Documents with fewer than 2 tokens have no
     * score and are absent, as in [[bigramScore]].
+    *
+    * The result comes back persisted and is the only cache the call
+    * leaves: its first action fills it and releases every staged frame,
+    * and the caller owns its `unpersist()`.
     */
   def perplexityBuckets(model: DataFrame, docs: DataFrame, idCol: String,
                         textCol: String, groupCol: String,
@@ -217,7 +221,11 @@ object LanguageModel {
         when(col("_rn") * 3 <= col("_n"), lit("head"))
           .when(col("_rn") * 3 <= col("_n") * 2, lit("middle"))
           .otherwise(lit("tail")).as("bucket"))
-    Dedup.releaseAfter(out, Seq(scored))
+    // `ranked` is ordinalByKey's persisted ordinal table: released with
+    // the staged scores once the first action has filled `out`'s own
+    // cache, which the caller holds (a second action must not re-rank
+    // against the offsets the first run broadcast)
+    Dedup.releaseAfter(out.persist(), Seq(scored, ranked))
   }
 
   /** Trigram scoring with STUPID BACKOFF (Brants et al. 2007, "Large

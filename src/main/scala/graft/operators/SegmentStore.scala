@@ -36,12 +36,71 @@ import org.json4s.JValue
   * dir committed without one (a parquet sidecar), or whose doc records
   * no `schema`, was written by an older graft layout and is refused
   * with an `IllegalStateException` naming it — rebuild with `build()`.
+  *
+  * A call sees an index through ONE [[Snapshot]] ([[open]]): the
+  * committed segment and tombstone dirs, listed once, each with its
+  * commit doc read and parsed once. Corpus moments, layout, tombstone
+  * scopes and payload schemas all come from that snapshot, so every
+  * reader of the call sees the same committed state and no doc is
+  * read twice.
   */
 private[graft] object SegmentStore {
 
   def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A committed segment or tombstone batch dir and its parsed commit
+    * doc (`stats/doc.json`).
+    */
+  final case class Committed(path: String, doc: JValue) {
+    def name: String = new org.apache.hadoop.fs.Path(path).getName
+    /** A numeric field of the commit doc. */
+    def num(field: String): Double = docDouble(doc, field)
+    /** The read schema the commit doc records for payload `sub`. */
+    def schema(sub: String): StructType =
+      recordedSchema(doc, s"$path/stats", sub)
+  }
+
+  /** The committed state of an index root as one call sees it: the
+    * committed segments and tombstone batches (sorted), each doc read
+    * once. `segs` may be narrowed to a write's tombstone scope.
+    */
+  final case class Snapshot(root: String, segs: Seq[Committed],
+                            dels: Seq[Committed]) {
+    /** An additive commit-doc moment (`n`, `sum_len`) of the live
+      * corpus: its sum over the segments minus what the tombstones
+      * charged.
+      */
+    def liveSum(field: String): Double =
+      segs.map(_.num(field)).sum - dels.map(_.num(field)).sum
+
+    /** The same segments without their tombstones: every stored row. */
+    def withoutTombstones: Snapshot = copy(dels = Nil)
+  }
+
+  /** List the committed dirs under `root` and read their commit docs —
+    * an index that may still be empty (a stream's first batch, a
+    * compaction of nothing).
+    */
+  def snapshot(spark: SparkSession, root: String): Snapshot = {
+    val fs = fsOf(spark, root)
+    def read(dirs: Seq[String]) =
+      dirs.map(d => Committed(d, readDocDir(fs, s"$d/stats")))
+    Snapshot(root, read(committedSegments(spark, root)),
+      read(committedDeletes(spark, root)))
+  }
+
+  /** [[snapshot]] of an index a call reads: it fails loudly on a
+    * never-built or crashed-before-first-commit root, where an empty
+    * result would read as "no matches".
+    */
+  def open(spark: SparkSession, root: String): Snapshot = {
+    val snap = snapshot(spark, root)
+    require(snap.segs.nonEmpty,
+      s"$root has no committed segments — build() first")
+    snap
+  }
 
   /** Committed segment dirs (stats marker present), sorted. */
   def committedSegments(spark: SparkSession, indexPath: String): Seq[String] =
@@ -53,7 +112,7 @@ private[graft] object SegmentStore {
   def committedDeletes(spark: SparkSession, indexPath: String): Seq[String] =
     committedUnder(spark, s"$indexPath/deletes")
 
-  def committedUnder(spark: SparkSession, root: String): Seq[String] = {
+  private def committedUnder(spark: SparkSession, root: String): Seq[String] = {
     val fs = fsOf(spark, root)
     val p = new org.apache.hadoop.fs.Path(root)
     if (!fs.exists(p)) Nil
@@ -188,14 +247,12 @@ private[graft] object SegmentStore {
       case _ => throw olderLayout(dir, s"no recorded schema for '$sub'")
     }
 
-  /** Read payload `sub` of a committed segment or tombstone batch `dir`
+  /** Read payload `sub` of a committed segment or tombstone batch
     * with the schema its commit doc records — no inference job.
     */
-  def readPayload(spark: SparkSession, dir: String, sub: String): DataFrame = {
-    val stats = s"$dir/stats"
-    spark.read.schema(recordedSchema(readDocDir(fsOf(spark, dir), stats),
-      stats, sub)).parquet(s"$dir/$sub")
-  }
+  def readPayload(spark: SparkSession, dir: Committed,
+                  sub: String): DataFrame =
+    spark.read.schema(dir.schema(sub)).parquet(s"${dir.path}/$sub")
 
   /** Numeric field of a doc (JSON numbers parse as int or double). */
   def docDouble(doc: org.json4s.JValue, field: String): Double =
@@ -210,44 +267,61 @@ private[graft] object SegmentStore {
   /** (id, _seg) applicability pairs of the committed tombstones: a
     * row means "id is dead IN that segment". Bounded between
     * compactions — always broadcast, never shuffled against payloads.
-    * The scope and the ids schema ride the stats doc (one driver-side
-    * read).
+    * The scope and the ids schema ride the snapshot's commit docs.
     */
-  def tombstonePairs(spark: SparkSession, dels: Seq[String]): DataFrame =
+  private def tombstonePairs(spark: SparkSession,
+                             dels: Seq[Committed]): DataFrame =
     dels.map { d =>
-      val stats = s"$d/stats"
-      val doc = readDocDir(fsOf(spark, d), stats)
-      val scope = (doc \ "scope") match {
+      val scope = (d.doc \ "scope") match {
         case org.json4s.JArray(xs) =>
           xs.collect { case org.json4s.JString(s) => Tuple1(s) }
-        case _ => throw olderLayout(stats, "no recorded scope")
+        case _ => throw olderLayout(s"${d.path}/stats", "no recorded scope")
       }
-      spark.read.schema(recordedSchema(doc, stats, "ids")).parquet(s"$d/ids")
+      readPayload(spark, d, "ids")
         .crossJoin(spark.createDataFrame(scope).toDF("_seg"))
     }.reduce(_ unionByName _)
+
+  /** The live rows of payload `sub` across the snapshot's segments:
+    * `prune` applied per segment (so partition-directory pruning
+    * happens at planning time), the segments unioned, and — when the
+    * snapshot holds tombstones — each row tagged with its segment name
+    * (a literal, free) and broadcast-anti-joined against the tombstone
+    * pairs, so a tombstone kills an id only in its own scope and a
+    * re-ingested id's newer row survives.
+    */
+  def liveRows(spark: SparkSession, snap: Snapshot, sub: String,
+               prune: DataFrame => DataFrame = identity): DataFrame =
+    if (snap.dels.isEmpty)
+      snap.segs.map(s => prune(readPayload(spark, s, sub)))
+        .reduce(_ unionByName _)
+    else
+      snap.segs.map(s => prune(readPayload(spark, s, sub))
+          .withColumn("_seg", org.apache.spark.sql.functions.lit(s.name)))
+        .reduce(_ unionByName _)
+        .join(org.apache.spark.sql.functions.broadcast(
+          tombstonePairs(spark, snap.dels)), Seq("id", "_seg"), "left_anti")
+        .drop("_seg")
 
   /** Commit one tombstone batch: the ids parquet first, then the stats
     * doc LAST (the marker) carrying the index's charge accounting
     * (`statsFields` — the inverted index records (n, sum_len); the
-    * vector index records n) plus the scope: the segments committed at
-    * the caller's probe time (the only ones that can hold the ids) and
-    * never a later segment — so a deleted id can be re-ingested (the
-    * upsert model) and the new payload is not masked.
+    * vector index records n) plus the scope: the snapshot's segments,
+    * committed at the caller's probe time (the only ones that can hold
+    * the ids) and never a later segment — so a deleted id can be
+    * re-ingested (the upsert model) and the new payload is not masked.
     */
-  def writeTombstone(spark: SparkSession, indexPath: String,
-                     segs: Seq[String], ids: DataFrame,
+  def writeTombstone(spark: SparkSession, scope: Snapshot, ids: DataFrame,
                      statsFields: Seq[(String, Double)]): Unit = {
-    val dir = s"$indexPath/deletes/batch-${java.util.UUID.randomUUID()}"
+    val dir = s"${scope.root}/deletes/batch-${java.util.UUID.randomUUID()}"
     labeled(spark, "tomb: ids write")(
       ids.write.mode("overwrite").parquet(s"$dir/ids"))
     writeDocDir(fsOf(spark, dir), s"$dir/stats", org.json4s.JObject(
       statsFields.map { case (k, v) =>
         k -> (org.json4s.JDouble(v): org.json4s.JValue)
       }.toList :+
-        ("scope" -> (org.json4s.JArray(
-          segs.map(s => org.json4s.JString(
-            new org.apache.hadoop.fs.Path(s).getName): org.json4s.JValue)
-            .toList): org.json4s.JValue)) :+
+        ("scope" -> (org.json4s.JArray(scope.segs.map(s =>
+          org.json4s.JString(s.name): org.json4s.JValue).toList)
+          : org.json4s.JValue)) :+
         schemaField(Seq("ids" -> writtenSchema(ids)))))
   }
 
@@ -262,22 +336,21 @@ private[graft] object SegmentStore {
     * RESULTS; semi-joins distribute over the left union, so that
     * rewrite is always sound.
     */
-  def liveLedgerFrames(spark: SparkSession, segs: Seq[String],
-                       dels: Seq[String], sub: String): Seq[DataFrame] = {
-    val fs = fsOf(spark, segs.head)
+  def liveLedgerFrames(spark: SparkSession, snap: Snapshot,
+                       sub: String): Seq[DataFrame] = {
+    val fs = fsOf(spark, snap.root)
     val tomb =
-      if (dels.isEmpty) None
+      if (snap.dels.isEmpty) None
       else Some(org.apache.spark.sql.functions.broadcast(
-        tombstonePairs(spark, dels)))
-    segs.map { s =>
-      val path = s"$s/$sub"
+        tombstonePairs(spark, snap.dels)))
+    snap.segs.map { s =>
+      val path = s"${s.path}/$sub"
       val base =
         if (Bucketing.isBucketedBatch(fs, path))
           Bucketing.readBucketedBatch(spark, path)
         else readPayload(spark, s, sub)
       val tagged = base.withColumn("_seg",
-        org.apache.spark.sql.functions.lit(
-          new org.apache.hadoop.fs.Path(s).getName))
+        org.apache.spark.sql.functions.lit(s.name))
       tomb.map(t => tagged.join(t, Seq("id", "_seg"), "left_anti"))
         .getOrElse(tagged)
     }

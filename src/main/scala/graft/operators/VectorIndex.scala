@@ -232,20 +232,9 @@ object VectorIndex {
       "ids" -> SegmentStore.writtenSchema(ids)) ++
       codes.map(c => "codes" -> SegmentStore.writtenSchema(c, Seq("cell")))
 
-  /** One committed segment's (n, nlist), read DRIVER-SIDE from its
-    * stats doc.
-    */
-  private def readVecStats(spark: SparkSession,
-                           seg: String): (Double, Int) = {
-    val doc = SegmentStore.readDocDir(fsOf(spark, seg), s"$seg/stats")
-    (SegmentStore.docDouble(doc, "n"),
-      SegmentStore.docDouble(doc, "nlist").toInt)
-  }
-
-  /** A committed tombstone batch's charged n — driver-side doc read. */
-  private def readDelN(spark: SparkSession, del: String): Double =
-    SegmentStore.docDouble(
-      SegmentStore.readDocDir(fsOf(spark, del), s"$del/stats"), "n")
+  /** The cell count the snapshot's segments were written with. */
+  private def nlistOf(snap: SegmentStore.Snapshot): Int =
+    snap.segs.head.num("nlist").toInt
 
   // ---- lifecycle ---------------------------------------------------
 
@@ -298,8 +287,7 @@ object VectorIndex {
   def append(docs: DataFrame, idCol: String, vecCol: String,
              indexPath: String): Unit = {
     val spark = docs.sparkSession
-    require(SegmentStore.committedSegments(spark, indexPath).nonEmpty,
-      s"$indexPath has no committed segments — build() first")
+    SegmentStore.open(spark, indexPath) // refuses a root never built
     writeSegment(docs, idCol, vecCol, indexPath,
       readCentroids(spark, indexPath))
   }
@@ -311,9 +299,7 @@ object VectorIndex {
     */
   def deleteDocs(ids: DataFrame, indexPath: String): Unit = {
     val spark = ids.sparkSession
-    val segs = SegmentStore.committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
+    val snap = SegmentStore.open(spark, indexPath)
     require(ids.columns.length == 1,
       s"ids must be a single-column frame, got ${ids.columns.toSeq}")
     val del = ids.select(col(ids.columns.head).as("id"))
@@ -323,8 +309,7 @@ object VectorIndex {
     // batch, which every search would broadcast and the next compact
     // would treat as a full-rewrite trigger
     if (nReq == 0) return
-    val hitRow = liveIdFrames(spark, segs,
-        SegmentStore.committedDeletes(spark, indexPath))
+    val hitRow = liveIdFrames(spark, snap)
       .map(_.join(del, Seq("id"), "left_semi"))
       .reduce(_ unionByName _)
       .agg(count(lit(1)).as("n"), count_distinct(col("id")).as("d")).head()
@@ -333,7 +318,7 @@ object VectorIndex {
         s"rows over ${hitRow.getLong(1)} distinct ids matched in " +
         s"$indexPath — unknown/already-tombstoned ids (or an id live " +
         "in two segments) are contract violations")
-    SegmentStore.writeTombstone(spark, indexPath, segs, del,
+    SegmentStore.writeTombstone(spark, snap, del,
       Seq("n" -> hitRow.getLong(0).toDouble))
   }
 
@@ -372,12 +357,10 @@ object VectorIndex {
   def upsertDocs(docs: DataFrame, idCol: String, vecCol: String,
                  indexPath: String): Unit = {
     val spark = docs.sparkSession
-    val segs = SegmentStore.committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
+    val snap = SegmentStore.open(spark, indexPath)
     val centroids = readCentroids(spark, indexPath)
     validateBatch(docs, idCol, vecCol, centroids.head.length)
-    tombstoneLiveOf(docs, idCol, indexPath, segs)
+    tombstoneLiveOf(docs, idCol, snap)
     writeSegment(docs, idCol, vecCol, indexPath, centroids)
   }
 
@@ -389,19 +372,18 @@ object VectorIndex {
     * reshuffles (the [[InvertedIndex]] lens-probe rule, spec-pinned).
     */
   private def tombstoneLiveOf(docs: DataFrame, idCol: String,
-                              indexPath: String, segs: Seq[String]): Unit = {
+                              scope: SegmentStore.Snapshot): Unit = {
     val spark = docs.sparkSession
     SegmentStore.labeled(spark, "vec tomb: live probe") {
       val ids = docs.select(col(idCol).as("id")).distinct()
         .localCheckpoint(true)
-      val hits = liveIdFrames(spark, segs,
-          SegmentStore.committedDeletes(spark, indexPath))
+      val hits = liveIdFrames(spark, scope)
         .map(_.join(ids, Seq("id"), "left_semi"))
         .reduce(_ unionByName _)
         .localCheckpoint(true)
       val n = hits.count()
       if (n > 0)
-        SegmentStore.writeTombstone(spark, indexPath, segs,
+        SegmentStore.writeTombstone(spark, scope,
           hits.select("id").distinct(), Seq("n" -> n.toDouble))
     }
   }
@@ -413,9 +395,9 @@ object VectorIndex {
     * and union the RESULTS; semi-joins distribute over the left
     * union).
     */
-  private def liveIdFrames(spark: SparkSession, segs: Seq[String],
-                           dels: Seq[String]): Seq[DataFrame] =
-    SegmentStore.liveLedgerFrames(spark, segs, dels, "ids")
+  private def liveIdFrames(spark: SparkSession,
+                           snap: SegmentStore.Snapshot): Seq[DataFrame] =
+    SegmentStore.liveLedgerFrames(spark, snap, "ids")
 
   /** Exactly-once per-batch streaming ingest (append-only feeds) —
     * the [[InvertedIndex.ingestBatch]] discipline: batch-id-named
@@ -454,15 +436,14 @@ object VectorIndex {
     if (fs.exists(marker)) return
     if (!docs.isEmpty) {
       val ownName = s"seg-batch-$batchId"
-      val all = SegmentStore.committedSegments(spark, indexPath)
-      val others = all.filterNot(s =>
-        new org.apache.hadoop.fs.Path(s).getName == ownName)
+      val snap = SegmentStore.snapshot(spark, indexPath)
+      val others = snap.copy(segs = snap.segs.filterNot(_.name == ownName))
       val centroids = ensureQuantizer(docs, vecCol, indexPath, nlistIfNew)
       // reject a bad batch BEFORE the tombstone commits (see
       // validateBatch — a replayed rejection must leave the index
       // untouched, not the batch's live versions masked)
       validateBatch(docs, idCol, vecCol, centroids.head.length)
-      if (others.nonEmpty) tombstoneLiveOf(docs, idCol, indexPath, others)
+      if (others.segs.nonEmpty) tombstoneLiveOf(docs, idCol, others)
       writeSegmentNamed(docs, idCol, vecCol, indexPath, ownName, centroids)
     }
     fs.create(marker, true).close()
@@ -502,9 +483,8 @@ object VectorIndex {
       val nUpserts = r.getLong(3)
       if (r.getLong(0) > 0) {
         val ownName = s"seg-batch-$batchId"
-        val all = SegmentStore.committedSegments(spark, indexPath)
-        val others = all.filterNot(s =>
-          new org.apache.hadoop.fs.Path(s).getName == ownName)
+        val snap = SegmentStore.snapshot(spark, indexPath)
+        val others = snap.copy(segs = snap.segs.filterNot(_.name == ownName))
         val ups = evs.filter(col("_op") === "upsert")
           .select(col("id").as(idCol), col("_vec").as(vecCol))
         // quantizer + dimension check BEFORE the tombstone commits
@@ -517,7 +497,7 @@ object VectorIndex {
             validateBatch(ups, idCol, vecCol, c.head.length)
             Some(c)
           }
-        if (others.nonEmpty) tombstoneLiveOf(evs, "id", indexPath, others)
+        if (others.segs.nonEmpty) tombstoneLiveOf(evs, "id", others)
         centroids.foreach(c =>
           writeSegmentNamed(ups, idCol, vecCol, indexPath, ownName, c))
       }
@@ -613,27 +593,21 @@ object VectorIndex {
     heal(spark, indexPath)
     val fs = fsOf(spark, indexPath)
     SegmentStore.sweepUncommitted(fs, indexPath)
-    val segs = SegmentStore.committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
-    val live = liveVectors(spark, segs, dels, identity)
+    val snap = SegmentStore.open(spark, indexPath)
+    val live = SegmentStore.liveRows(spark, snap, "vectors")
       .select(col("id"), col("v"))
     if (live.limit(1).count() == 0) {
       System.err.println(s"[graft] rebuild skipped: every document in " +
         s"$indexPath is tombstoned (build() afresh to reset)")
       return
     }
-    val newNlist =
-      if (nlist > 0) nlist
-      else readVecStats(spark, segs.head)._2
+    val newNlist = if (nlist > 0) nlist else nlistOf(snap)
     val cents = Similarity.trainIvfCentroids(live, "v", newNlist,
       kmeansIters, sampleN, seed)
     val name = s"seg-${java.util.UUID.randomUUID()}"
     val seg = s"$indexPath/segments/$name"
     val inputs =
-      segs.map(s => "segments/" + new org.apache.hadoop.fs.Path(s).getName) ++
-      dels.map(d => "deletes/" + new org.apache.hadoop.fs.Path(d).getName)
+      snap.segs.map("segments/" + _.name) ++ snap.dels.map("deletes/" + _.name)
     // the manifest lands before ANY bytes (quantizer-next included):
     // a crash at any later point leaves a manifest whose uncommitted
     // branch in [[heal]] rolls back both the staged quantizer and the
@@ -675,8 +649,8 @@ object VectorIndex {
     require(fs.rename(new org.apache.hadoop.fs.Path(nextPath),
       new org.apache.hadoop.fs.Path(quantizerPath(indexPath))),
       s"quantizer promotion rename failed in $indexPath")
-    (segs ++ dels).foreach(s =>
-      fs.delete(new org.apache.hadoop.fs.Path(s), true))
+    (snap.segs ++ snap.dels).foreach(s =>
+      fs.delete(new org.apache.hadoop.fs.Path(s.path), true))
     Manifest.delete(fs, rebuildManifestPath(indexPath))
   }
 
@@ -693,16 +667,16 @@ object VectorIndex {
     heal(spark, indexPath)
     val fs = fsOf(spark, indexPath)
     SegmentStore.sweepUncommitted(fs, indexPath)
-    val segs = SegmentStore.committedSegments(spark, indexPath)
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
+    val snap = SegmentStore.snapshot(spark, indexPath)
+    val (segs, dels) = (snap.segs, snap.dels)
     if (segs.length > 1 || (dels.nonEmpty && segs.nonEmpty)) {
-      val nlist = readVecStats(spark, segs.head)._2
+      val nlist = nlistOf(snap)
       // live vectors stay a LAZY plan — the merged write is its one
       // full scan; the ids ledger and stats then derive from a
       // column-pruned (id, cell) read of the segment just written, so
       // the corpus is never checkpointed (the InvertedIndex.compact
       // discipline: only ledger-sized things get pinned)
-      val live = liveVectors(spark, segs, dels, identity)
+      val live = SegmentStore.liveRows(spark, snap, "vectors")
       // an all-tombstoned index would compact to a segment no reader
       // can open (schema-less empty vectors). Searches over the
       // logical state stay correct (they see the empty live set), so
@@ -719,8 +693,7 @@ object VectorIndex {
       val name = s"seg-${java.util.UUID.randomUUID()}"
       val seg = s"$indexPath/segments/$name"
       val inputs =
-        segs.map(s => "segments/" + new org.apache.hadoop.fs.Path(s).getName) ++
-        dels.map(d => "deletes/" + new org.apache.hadoop.fs.Path(d).getName)
+        segs.map("segments/" + _.name) ++ dels.map("deletes/" + _.name)
       Manifest.write(fs, SegmentStore.manifestPath(indexPath),
         s"segments/$name" +: inputs)
       live.repartition(nlist, col("cell"))
@@ -759,41 +732,12 @@ object VectorIndex {
       writeVecStats(spark, seg, n.toDouble, nlist,
         payloadSchemas(vectors, written, codes))
       (segs ++ dels).foreach(s =>
-        fs.delete(new org.apache.hadoop.fs.Path(s), true))
+        fs.delete(new org.apache.hadoop.fs.Path(s.path), true))
       Manifest.delete(fs, SegmentStore.manifestPath(indexPath))
     }
   }
 
   // ---- read paths --------------------------------------------------
-
-  /** The live vectors of every segment under `prune` (cell pruning —
-    * applied per segment so partition-directory pruning happens at
-    * planning time), tombstones subtracted segment-scoped.
-    */
-  private def liveVectors(spark: SparkSession, segs: Seq[String],
-                          dels: Seq[String],
-                          prune: DataFrame => DataFrame): DataFrame =
-    liveSub(spark, segs, dels, "vectors", prune)
-
-  /** Live rows of a per-segment payload subdir (`vectors` or the
-    * PQ `codes`), `prune` applied per segment so cell-directory
-    * pruning happens at planning time, tombstones subtracted
-    * segment-scoped.
-    */
-  private def liveSub(spark: SparkSession, segs: Seq[String],
-                      dels: Seq[String], sub: String,
-                      prune: DataFrame => DataFrame): DataFrame = {
-    val tagged = segs.map(s =>
-      prune(SegmentStore.readPayload(spark, s, sub))
-        .withColumn("_seg", lit(new org.apache.hadoop.fs.Path(s).getName)))
-      .reduce(_ unionByName _)
-    val out =
-      if (dels.isEmpty) tagged
-      else tagged.join(
-        broadcast(SegmentStore.tombstonePairs(spark, dels)),
-        Seq("id", "_seg"), "left_anti")
-    out.drop("_seg")
-  }
 
   /** Index observability: one row of live corpus size, structural
     * counts, and per-cell occupancy — the maintenance signals a
@@ -813,19 +757,12 @@ object VectorIndex {
     * `cell`), reduced map-side to ≤ nlist rows — not the vectors.
     */
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
-    val segs = SegmentStore.committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
-    // driver-side doc reads of the per-dir stats sidecars (the
-    // InvertedIndex.liveStats shape) — zero Spark jobs
-    val segStats = segs.map(readVecStats(spark, _))
-    val delN = dels.map(readDelN(spark, _)).sum
-    val segN = segStats.map(_._1).sum
-    val nlist = segStats.head._2
+    // the snapshot's commit docs carry every count — zero Spark jobs
+    val snap = SegmentStore.open(spark, indexPath)
+    val nlist = nlistOf(snap)
     // live per-cell occupancy: ≤ nlist rows to the driver, zero-filled
     // for cells no live vector occupies (an empty cell IS drift signal)
-    val occRows = liveIdFrames(spark, segs, dels)
+    val occRows = liveIdFrames(spark, snap)
       .map(_.groupBy(col("cell").cast("int").as("cell"))
         .agg(count(lit(1)).as("_c")))
       .reduce(_ unionByName _)
@@ -836,9 +773,9 @@ object VectorIndex {
     val mean = occ.sum.toDouble / nlist
     val skew = if (mean > 0) occ.max / mean else 0.0
     spark.range(1).select(
-      lit((segN - delN).toLong).as("n_docs"),
-      lit(segs.length).as("segments"),
-      lit(dels.length).as("tombstone_batches"),
+      lit(snap.liveSum("n").toLong).as("n_docs"),
+      lit(snap.segs.length).as("segments"),
+      lit(snap.dels.length).as("tombstone_batches"),
       lit(nlist).as("nlist"),
       lit(occ.min).as("cell_occ_min"),
       lit(occ.max).as("cell_occ_max"),
@@ -888,10 +825,7 @@ object VectorIndex {
       s"filterIds must be a single-column id frame, got " +
         s"${f.columns.mkString(", ")}"))
     val spark = queries.sparkSession
-    val segs = SegmentStore.committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
+    val snap = SegmentStore.open(spark, indexPath)
     val centroids = readCentroids(spark, indexPath)
     val nlist = centroids.length
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
@@ -918,7 +852,7 @@ object VectorIndex {
         explode(col("probes")).as("cell"), col("q_n")).schema)
     // bounded driver state: the distinct probed-cell set is ≤ nlist
     val wanted = probeRows.map(_.getInt(2)).distinct
-    val c0 = liveVectors(spark, segs, dels,
+    val c0 = SegmentStore.liveRows(spark, snap, "vectors",
       _.filter(col("cell").isin(wanted: _*)))
     val c = filterIds.fold(c0)(f =>
       c0.join(f.toDF("id"), Seq("id"), "left_semi"))
@@ -966,10 +900,7 @@ object VectorIndex {
     require(k > 0)
     require(maxQueries >= 1, s"maxQueries must be positive, got $maxQueries")
     val spark = queries.sparkSession
-    val segs = SegmentStore.committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
+    val snap = SegmentStore.open(spark, indexPath)
     val model = readPqModel(spark, indexPath).getOrElse(
       throw new IllegalArgumentException(
         s"$indexPath was built without PQ codes — build(pqM > 0) " +
@@ -995,9 +926,9 @@ object VectorIndex {
       .distinct.toSeq
     val prune: DataFrame => DataFrame =
       _.filter(col("cell").isin(wanted: _*))
-    val codesLive = liveSub(spark, segs, dels, "codes", prune)
+    val codesLive = SegmentStore.liveRows(spark, snap, "codes", prune)
       .select("id", "codes")
-    val corpusLive = liveVectors(spark, segs, dels, prune)
+    val corpusLive = SegmentStore.liveRows(spark, snap, "vectors", prune)
       .select(col("id"), col("v"))
     val q2 = queries.select(col(qIdCol).as("id"), col(vecCol).as("v"))
     Quantization.pqSearchTopK(q2, codesLive, corpusLive, "id", "v", k,

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level profile of one gate: `runMain graft.tools.ProfileJobs
   * <queryName> <sfDir> [repeat]` — registers a listener recording every
@@ -17,13 +16,7 @@ object ProfileJobs {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = args(1)
     val repeat = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-profile-jobs")
 
     final case class J(id: Int, start: Long, var end: Long = -1L,
                        var site: String = "", var desc: String = "")

@@ -359,13 +359,8 @@ class DedupSpec extends AnyFunSuite {
         (41L, "never before seen sentence about manifest replay windows"))
         .toDF("id", "text")
       assert(matches(regB, b5).contains((40L, 0L)))
-      // listener delivery is async on the bus — wait until the
-      // captured set goes quiet
-      val deadline = System.currentTimeMillis + 20000
-      var last = -1
-      while (captured.size != last && System.currentTimeMillis < deadline) {
-        last = captured.size; Thread.sleep(400)
-      }
+      // listener delivery is async on the bus — drain it
+      org.apache.spark.TestJobs.drainListenerBus(spark)
       // the property: registry rows reach their probe join pre-
       // partitioned — no Exchange BETWEEN a bucketed registry scan and
       // its nearest join ancestor. Exchanges above the join (e.g. the

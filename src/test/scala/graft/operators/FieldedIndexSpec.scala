@@ -246,7 +246,7 @@ class FieldedIndexSpec extends AnyFunSuite {
     }
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
       "a sibling field was still writing when build() returned")
-    assert(InvertedIndex.committedSegments(spark, s"$root/fields/text")
+    assert(SegmentStore.committedSegments(spark, s"$root/fields/text")
       .size == 1)
   }
 }

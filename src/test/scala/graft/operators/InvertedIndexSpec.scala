@@ -745,11 +745,7 @@ class InvertedIndexSpec extends AnyFunSuite {
       InvertedIndex.upsertDocs(upd, "doc_id", "text", path)
       InvertedIndex.deleteDocs(
         docs.orderBy(col("doc_id").desc).limit(3).select("doc_id"), path)
-      val deadline = System.currentTimeMillis + 20000
-      var last = -1
-      while (captured.size != last && System.currentTimeMillis < deadline) {
-        last = captured.size; Thread.sleep(400)
-      }
+      org.apache.spark.TestJobs.drainListenerBus(spark)
       val plans = captured.toArray(
         Array.empty[org.apache.spark.sql.execution.QueryExecution])
         .map(_.executedPlan)

@@ -168,9 +168,11 @@ class LanguageModelSpec extends AnyFunSuite {
     // the release runs in a query-execution listener on the bus
     org.apache.spark.TestJobs.drainListenerBus(spark)
     assert(!scoresCached)
-    // what stays is the ordinal table Sampling.ordinalByKey returns
-    // persisted, so that a second action reuses the ordinals it assigned
-    assert((sc.getPersistentRDDs.keySet -- before).size <= 1)
+    // a second action reads the result's own cache: same rows
+    assert(out.collect().length === 8)
+    // the only persisted frame left is the one the caller holds
+    out.unpersist()
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("broadcastUnigrams=false scores bit-identically to the default") {

@@ -323,12 +323,9 @@ class SamplingSpec extends AnyFunSuite {
     try {
       val df = (0L until 60L).map(i => (i, s"d$i")).toDF("id", "payload")
       Sampling.exportShards(df, "id", rowsPerShard = 20, seed = 5, dir)
-      // QueryExecutionListener delivery is async — settle like the
-      // other listener-pinned specs
-      var last = -1
-      while (captured.size != last) {
-        last = captured.size; Thread.sleep(400)
-      }
+      // QueryExecutionListener delivery is async — drain the bus like
+      // the other listener-pinned specs
+      org.apache.spark.TestJobs.drainListenerBus(spark)
       val pushed = captured.toArray(Array.empty[String]).exists(p =>
         p.contains("PushedAggregation") && p.contains("MIN(ordinal)") &&
           p.contains("MAX(ordinal)") && p.contains("COUNT(*)"))

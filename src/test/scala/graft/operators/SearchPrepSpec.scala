@@ -53,6 +53,18 @@ class SearchPrepSpec extends AnyFunSuite {
     Stores(inv, fld, vec)
   }
 
+  /** A second inverted store for the cross-index search: fifty
+    * documents under ids outside the corpus id space (the disjoint-ids
+    * contract), positional like `inv` so their postings union.
+    */
+  private lazy val otherInv: String = {
+    val p = tmp("graft-prep-inv2")
+    InvertedIndex.build(docs.filter(col("doc_id") < 50)
+      .select((col("doc_id") + 1000000).as("doc_id"), col("text")),
+      "doc_id", "text", p, positions = true)
+    p
+  }
+
   /** Two queries, ids outside the corpus id space, as read from
     * storage and (`queries`) as a frame built on the driver; resolved
     * once here so that reading the embeddings is not counted against
@@ -96,11 +108,32 @@ class SearchPrepSpec extends AnyFunSuite {
     ("knn_stored", 1, () => VectorIndex.searchTopK(
       storedQueries.select("q_id", "vec"), s.vec, 5, nprobe = 2)),
     ("hybrid_stored", 2, () => Serving.searchHybrid(storedQueries, s.inv,
-      s.vec, 5, perLegK = 10)))
+      s.vec, 5, perLegK = 10)),
+    ("search_after", 0, () => InvertedIndex.searchAfter(spark, s.inv,
+      Seq("stream", "filter"), 10, afterScore = 1.0e6, afterId = 0L)),
+    ("term_stats", 0, () => InvertedIndex.termStats(spark, s.inv,
+      Seq("stream", "filter"))),
+    ("stats", 0, () => InvertedIndex.stats(spark, s.inv)),
+    ("indices", 0, () => InvertedIndex.searchTopKIndices(spark,
+      Seq(s.inv, otherInv), Seq("stream", "filter"), 10)),
+    // the synonym groups' member dfs are one bounded collect, whose
+    // adaptive query stages run as jobs of their own
+    ("synonyms", 4, () => InvertedIndex.searchTopKSynonyms(spark, s.inv,
+      Seq("stream", "join"), Seq("stream, filter"), 10)),
+    ("phrase", 0, () => InvertedIndex.phraseSearchTopK(spark, s.inv,
+      Seq("order", "fast"), 10)),
+    ("phrase_prefix", 1, () => InvertedIndex.phrasePrefixSearchTopK(spark,
+      s.inv, "order fa", 10)),
+    // the candidate terms' live dfs: one bounded collect, likewise
+    ("more_like_this", 4, () => InvertedIndex.moreLikeThisTopK(spark, s.inv,
+      "stream stream filter filter join join", 10)),
+    ("fielded_query_string", 0, () => FieldedIndex.queryStringSearchTopK(
+      spark, s.fld, "title:stream filter -join", fields, 10)))
 
   test("a search call runs no Spark job before the caller's action") {
     val s = stores
     queries // its jobs land outside the measured calls
+    otherInv
     searches(s).foreach { case (kind, allowed, call) =>
       val (df, jobs) = jobsDuring(spark)(call())
       assert(jobs <= allowed,

@@ -221,11 +221,7 @@ class VectorIndexSpec extends AnyFunSuite {
         "vec_id", "embedding", path)
       VectorIndex.deleteDocs(
         emb.orderBy(col("vec_id").desc).limit(3).select("vec_id"), path)
-      val deadline = System.currentTimeMillis + 20000
-      var last = -1
-      while (captured.size != last && System.currentTimeMillis < deadline) {
-        last = captured.size; Thread.sleep(400)
-      }
+      org.apache.spark.TestJobs.drainListenerBus(spark)
       val plans = captured.toArray(
         Array.empty[org.apache.spark.sql.execution.QueryExecution])
         .map(_.executedPlan)
